@@ -3655,1016 +3655,250 @@ def classifier_score_check(spark, sf):
 # ---------------------------------------------------------------- registry
 
 
+# Queries whose engine code changed in the latest change set, each with
+# the reason. They lead the driver's correctness window; a change that
+# touches an engine path replaces this list with its own rows.
+PRIORITY = [
+    "zorder_key_check",  # layout footer stats skip logical-typed columns
+    "zorder_key_n",  # layout footer stats skip logical-typed columns
+    "hilbert_key_check",  # layout footer stats skip logical-typed columns
+    "dedup_minhash_lsh",  # MinHash band key + verify moved to dedup helpers
+    "dedup_minhash_cjk",  # MinHash band key + verify moved to dedup helpers
+    "dedup_minhash_xxh",  # shared xxhash64 signature aggregation
+    "minhash_xxh_pairset",  # dual-engine path on the shared helpers
+    "dedup_ngram_jaccard",  # LSH candidates come from minhash_lsh_pairs
+    "fuzzy_decontamination",  # shared MinHash band key
+]
+
+
+def correctness_window(
+    names: list[str],
+    last_checked: dict[str, int],
+    priority: list[str],
+    size: int = 50,
+) -> list[str]:
+    """The driver's correctness window: ``priority`` in order, then the
+    remaining slots stalest-first by the round of each name's latest
+    oracle evidence (never checked counts as round 0), ties by name."""
+    rest = sorted(
+        (n for n in names if n not in priority),
+        key=lambda n: (last_checked.get(n, 0), n),
+    )
+    return list(priority) + rest[: size - len(priority)]
+
+
+def last_checked_rounds(upto: int | None = None) -> dict[str, int]:
+    """Query name → the highest round N whose committed
+    ``CORRECTNESS_rNN.json`` holds a result for it (rounds ≤ ``upto``)."""
+    import json
+    import re
+
+    last: dict[str, int] = {}
+    for fname in _os.listdir(_repo):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if m is None or (upto is not None and int(m[1]) > upto):
+            continue
+        with open(_os.path.join(_repo, fname)) as fh:
+            for name in json.load(fh):
+                last[name] = max(last.get(name, 0), int(m[1]))
+    return last
+
+
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # The base dict below keeps the r8 grouping comments for history;
-    # the ACTUAL iteration order is rebuilt by the r9_window list after
-    # it (iteration order IS the driver's 50-row correctness window).
+    # iteration order IS the driver's 50-row correctness window
     q = {
-        # --- new in r9 wave 5 ---
-        "dedup_winnow": dedup_winnow_check,
-        "embedding_outliers": embedding_outliers_check,
-        "mmr_diverse_topk": mmr_diverse_topk,
-        "zorder_key_check": zorder_key_check,
-        "zorder_key_n": zorder_key_n,
-        "hilbert_key_check": hilbert_key_check,
-        # --- new in r8: never driver-checked ---
-        "ann_topk_pq_rerank": ann_topk_pq_rerank,
-        "png_color_decode": png_color_decode,
+        "ann_index_roundtrip": ann_index_roundtrip,
+        "ann_topk_bruteforce": ann_topk_bruteforce,
+        "ann_topk_ivf": ann_topk_ivf,
+        "ann_topk_ivf_kmeans": ann_topk_ivf_kmeans,
         "ann_topk_ivfpq": ann_topk_ivfpq,
         "ann_topk_ivfpq_residual": ann_topk_ivfpq_residual,
-        "ann_index_roundtrip": ann_index_roundtrip,
-        "ann_topk_ivf_kmeans": ann_topk_ivf_kmeans,
         "ann_topk_ivfpq_residual_k": ann_topk_ivfpq_residual_k,
-        # --- code (or oracle) changed in r8: neardup narrow-join rewrite,
-        #     tiered-rounding/curriculum/drift ADVICE fixes, TRY_CAST oracle ---
-        "neardup_time_horizon": neardup_time_horizon,
-        "neardup_estimate": neardup_estimate,
-        "kmeans_tiered": kmeans_tiered,
-        "curriculum_buckets": curriculum_buckets_check,
-        "dataset_drift": dataset_drift_check,
+        "ann_topk_lsh": ann_topk_lsh,
+        "ann_topk_lsh_mp": ann_topk_lsh_mp,
+        "ann_topk_pq": ann_topk_pq,
+        "ann_topk_pq_rerank": ann_topk_pq_rerank,
+        "approx_distinct_check": approx_distinct_check,
+        "approx_quantile_check": approx_quantile_check,
+        "audio_features": audio_features,
+        "bigram_logprob": bigram_logprob_check,
+        "bloom_decontamination": bloom_decontamination,
+        "bm25_search": bm25_search,
+        "bmp_decode": bmp_decode_check,
+        "boilerplate_removal": boilerplate_removal_check,
+        "bpe_encode_docs": bpe_encode_docs,
+        "bpe_merge_candidates": bpe_merge_candidates_check,
+        "bpe_roundtrip": bpe_roundtrip,
         "category_drift": category_drift_check,
-        "events_json_extract": events_json_extract,
-        # --- last driver row is CORRECTNESS_r05 (three rounds old):
-        #     flush the whole staleness tail this round (r7 verdict #1) ---
-        "ann_topk_ivf": ann_topk_ivf,
+        "charset_decode": charset_decode_check,
+        "chunk_documents": chunk_documents_check,
+        "classifier_score_docs": classifier_score_check,
+        "classifier_trained": classifier_trained_check,
+        "common_passages": common_passages_check,
+        "compression_quality": compression_quality,
+        "conditional_aggregation": conditional_aggregation,
         "corpus_quality_gate": corpus_quality_gate,
+        "crawl_coverage": crawl_coverage_check,
+        "curriculum_buckets": curriculum_buckets_check,
+        "customers_without_orders": customers_without_orders,
+        "data_validation_report": data_validation_report,
+        "dataset_drift": dataset_drift_check,
+        "date_arithmetic": date_arithmetic,
+        "decode_coverage": decode_coverage_check,
+        "decontamination_check": decontamination_check,
+        "dedup_connected_components": dedup_connected_components,
+        "dedup_exact": dedup_exact,
+        "dedup_incremental": dedup_incremental,
+        "dedup_keep_best": dedup_keep_best,
+        "dedup_minhash_cjk": dedup_minhash_cjk,
+        "dedup_minhash_lsh": dedup_minhash_lsh,
+        "dedup_minhash_xxh": dedup_minhash_xxh,
+        "dedup_ngram_dfcut": dedup_ngram_dfcut,
+        "dedup_ngram_jaccard": dedup_ngram_jaccard,
         "dedup_ngram_sampled": dedup_ngram_sampled,
+        "dedup_simhash": dedup_simhash,
+        "dedup_simhash_hamming": dedup_simhash_hamming,
+        "dedup_winnow": dedup_winnow_check,
+        "distinct_customers_per_segment": distinct_customers_per_segment,
+        "distinct_kmv": distinct_kmv,
         "doc_repetition": doc_repetition,
+        "document_extract": document_extract_check,
+        "docx_extract": docx_extract_check,
+        "domain_quota_sample": domain_quota_sample_check,
+        "domain_rollup_urls": domain_rollup_urls,
+        "dsir_select": dsir_select,
+        "embedding_near_dup": embedding_near_dup,
+        "embedding_outliers": embedding_outliers_check,
+        "embedding_pca": embedding_pca_check,
         "embedding_quant_dedup": embedding_quant_dedup,
+        "events_asof_join": events_asof_join,
+        "events_interval_join": events_interval_join,
+        "events_json_extract": events_json_extract,
+        "events_lead_lag": events_lead_lag,
+        "events_sessionization": events_sessionization,
+        "events_sliding_window": events_sliding_window,
+        "events_tier_rollup": events_tier_rollup,
+        "events_topk_users": events_topk_users,
+        "events_tumbling_window": events_tumbling_window,
+        "exif_scrub": exif_scrub_check,
+        "exists_subquery": exists_subquery,
+        "feed_extract": feed_extract_check,
+        "fuzzy_decontamination": fuzzy_decontamination_check,
+        "gif_decode": gif_decode_check,
+        "gif_frame_sample": gif_frame_sample_check,
+        "gopher_quality_rules": gopher_quality_rules,
+        "grouping_sets_orders": grouping_sets_orders,
+        "heavy_hitters_cms": heavy_hitters_cms,
+        "hilbert_key_check": hilbert_key_check,
+        "html_extract": html_extract_row,
+        "html_jsonld": html_jsonld_check,
+        "html_main_text": html_main_text_row,
+        "html_markdown": html_markdown_check,
+        "html_meta": html_meta_check,
+        "hybrid_search_rrf": hybrid_search_rrf,
+        "image_auto_orient": image_auto_orient_check,
+        "image_decode": image_decode,
+        "image_dhash": image_dhash_check,
+        "image_near_dup": image_near_dup_check,
+        "image_resize": image_resize,
+        "jpeg_420_decode": jpeg_420_decode_check,
+        "jpeg_color_decode": jpeg_color_decode_check,
         "jpeg_decode": jpeg_decode_check,
+        "jpeg_progressive_decode": jpeg_progressive_decode_check,
+        "kmeans_clusters": kmeans_clusters,
+        "kmeans_tiered": kmeans_tiered,
+        "lang_id_trained": lang_id_trained,
+        "latest_event_per_user": latest_event_per_user,
+        "line_dedup_firstkeep": line_dedup_firstkeep,
+        "min_max_by_nation": min_max_by_nation,
+        "minhash_xxh_pairset": minhash_xxh_pairset,
+        "mixture_sample": mixture_sample_check,
+        "mmr_diverse_topk": mmr_diverse_topk,
+        "multimodal_decode": multimodal_decode,
+        "multimodal_features": multimodal_features,
+        "neardup_estimate": neardup_estimate,
+        "neardup_time_horizon": neardup_time_horizon,
+        "normalize_text": normalize_text_check,
         "null_semantics": null_semantics,
+        "pack_sequences_check": pack_sequences_check,
+        "pdf_extract": pdf_extract_check,
+        "pdf_images": pdf_images_check,
+        "percentiles_by_segment": percentiles_by_segment,
         "pii_redaction": pii_redaction,
         "pipe_regex_replace": pipe_regex_replace,
         "pipe_regex_select": pipe_regex_select,
         "pipe_regex_split": pipe_regex_split,
         "pipe_replace": pipe_replace,
+        "pipe_subprocess": pipe_subprocess,
         "pipeline_chain": pipeline_chain,
+        "pivot_order_status": pivot_order_status,
+        "png_color_decode": png_color_decode,
+        "png_palette_decode": png_palette_decode_check,
         "q01_pricing_summary": q01_pricing_summary,
         "q02_min_cost_part": q02_min_cost_part,
         "q03_shipping_priority": q03_shipping_priority,
         "q04_order_priority": q04_order_priority,
         "q05_region_revenue": q05_region_revenue,
         "q06_forecast_revenue": q06_forecast_revenue,
-        "q14_promo_revenue": q14_promo_revenue,
-        "q18_large_orders": q18_large_orders,
-        "q22_idle_customers": q22_idle_customers,
-        "scalar_subquery_above_avg": scalar_subquery_above_avg,
-        "source_quality_rollup": source_quality_rollup,
-        "stratified_sample": stratified_sample,
-        "text_quality": text_quality,
-        "lang_id_trained": lang_id_trained,
-        "dsir_select": dsir_select,
-        "text_stats": text_stats,
-        "unpivot_lineitem_metrics": unpivot_lineitem_metrics,
-        "vocab_coverage": vocab_coverage,
-        # --- rows-only duo (no_oracle by design) — keep visibly
-        # cycling (compression_quality upgraded to a constrained
-        # oracle in r15, verdict #6) ---
-        "compression_quality": compression_quality,
-        "dedup_minhash_xxh": dedup_minhash_xxh,
-        "minhash_xxh_pairset": minhash_xxh_pairset,
-        "multimodal_decode": multimodal_decode,
-        # --- CORRECTNESS_r06 rows, oldest-evidence families first ---
-        "dedup_simhash": dedup_simhash,
-        "dedup_exact": dedup_exact,
-        "dedup_minhash_lsh": dedup_minhash_lsh,
-        "dedup_minhash_cjk": dedup_minhash_cjk,
-        "dedup_ngram_jaccard": dedup_ngram_jaccard,
-        "dedup_simhash_hamming": dedup_simhash_hamming,
-        "dedup_incremental": dedup_incremental,
-        "ann_topk_bruteforce": ann_topk_bruteforce,
-        "ann_topk_lsh": ann_topk_lsh,
-        "ann_topk_lsh_mp": ann_topk_lsh_mp,
-        "embedding_near_dup": embedding_near_dup,
-        "embedding_pca": embedding_pca_check,
-        "bloom_decontamination": bloom_decontamination,
-        # --- below the 50-row driver window: r06/r07-green rows ---
-        "repeated_span_removal": repeated_span_removal_check,
-        "ann_topk_pq": ann_topk_pq,
-        "normalize_text": normalize_text_check,
-        "mixture_sample": mixture_sample_check,
-        "fuzzy_decontamination": fuzzy_decontamination_check,
-        "kmeans_clusters": kmeans_clusters,
-        "semdedup_prune": semdedup_prune,
-        "pivot_order_status": pivot_order_status,
-        "grouping_sets_orders": grouping_sets_orders,
-        "exists_subquery": exists_subquery,
-        "running_revenue_window": running_revenue_window,
-        "percentiles_by_segment": percentiles_by_segment,
-        "min_max_by_nation": min_max_by_nation,
-        "conditional_aggregation": conditional_aggregation,
-        "date_arithmetic": date_arithmetic,
-        "string_functions": string_functions,
-        "range_join_value_bands": range_join_value_bands,
-        "dedup_ngram_dfcut": dedup_ngram_dfcut,
-        "pipe_subprocess": pipe_subprocess,
-        "dedup_connected_components": dedup_connected_components,
-        "dedup_keep_best": dedup_keep_best,
-        "sample_hash_10pct": sample_hash_10pct,
-        "train_val_test_split": train_val_test_split,
-        "approx_distinct_check": approx_distinct_check,
-        "distinct_kmv": distinct_kmv,
         "q07_volume_shipping": q07_volume_shipping,
         "q08_market_share": q08_market_share,
         "q09_product_profit": q09_product_profit,
+        "q10_returned_items": q10_returned_items,
         "q11_important_suppliers": q11_important_suppliers,
-        "jpeg_color_decode": jpeg_color_decode_check,
-        "jpeg_420_decode": jpeg_420_decode_check,
-        "jpeg_progressive_decode": jpeg_progressive_decode_check,
-        "png_palette_decode": png_palette_decode_check,
-        "gif_decode": gif_decode_check,
-        "webp_decode": webp_decode_check,
-        "webp_frame_sample": webp_frame_sample_check,
-        "tiff_decode": tiff_decode_check,
-        "gif_frame_sample": gif_frame_sample_check,
-        "bmp_decode": bmp_decode_check,
-        "image_dhash": image_dhash_check,
-        "image_auto_orient": image_auto_orient_check,
-        "image_near_dup": image_near_dup_check,
-        "decode_coverage": decode_coverage_check,
-        "common_passages": common_passages_check,
-        "events_sessionization": events_sessionization,
-        "events_tumbling_window": events_tumbling_window,
-        "events_sliding_window": events_sliding_window,
-        "events_interval_join": events_interval_join,
-        "events_asof_join": events_asof_join,
-        "events_lead_lag": events_lead_lag,
-        "events_topk_users": events_topk_users,
-        "approx_quantile_check": approx_quantile_check,
         "q12_late_shipments": q12_late_shipments,
         "q13_customer_distribution": q13_customer_distribution,
+        "q14_promo_revenue": q14_promo_revenue,
         "q15_top_supplier": q15_top_supplier,
         "q16_part_supplier_counts": q16_part_supplier_counts,
         "q17_small_quantity_revenue": q17_small_quantity_revenue,
+        "q18_large_orders": q18_large_orders,
         "q19_discounted_revenue": q19_discounted_revenue,
         "q20_excess_suppliers": q20_excess_suppliers,
         "q21_waiting_orders": q21_waiting_orders,
-        "bpe_merge_candidates": bpe_merge_candidates_check,
-        "bpe_encode_docs": bpe_encode_docs,
-        "bpe_roundtrip": bpe_roundtrip,
-        "classifier_trained": classifier_trained_check,
-        "token_length_histogram": token_length_histogram_check,
-        "boilerplate_removal": boilerplate_removal_check,
-        "line_dedup_firstkeep": line_dedup_firstkeep,
-        "classifier_score_docs": classifier_score_check,
-        "gopher_quality_rules": gopher_quality_rules,
-        "bm25_search": bm25_search,
-        "hybrid_search_rrf": hybrid_search_rrf,
-        "bigram_logprob": bigram_logprob_check,
-        "tfidf_top_terms": tfidf_top_terms_check,
-        "weighted_sample_docs": weighted_sample_docs,
+        "q22_idle_customers": q22_idle_customers,
         "quota_sample_sources": quota_sample_sources,
-        "chunk_documents": chunk_documents_check,
+        "range_join_value_bands": range_join_value_bands,
+        "repeated_span_removal": repeated_span_removal_check,
+        "robots_eval": robots_check,
+        "rollup_orders": rollup_orders,
+        "running_revenue_window": running_revenue_window,
+        "sample_hash_10pct": sample_hash_10pct,
+        "scalar_functions": scalar_functions,
+        "scalar_subquery_above_avg": scalar_subquery_above_avg,
+        "semdedup_prune": semdedup_prune,
+        "sentence_split": sentence_split_check,
+        "set_ops_customers": set_ops_customers,
+        "sitemap_extract": sitemap_extract_check,
+        "source_quality_rollup": source_quality_rollup,
+        "stratified_sample": stratified_sample,
+        "string_functions": string_functions,
+        "text_quality": text_quality,
+        "text_stats": text_stats,
+        "tfidf_top_terms": tfidf_top_terms_check,
+        "tiff_decode": tiff_decode_check,
+        "token_length_histogram": token_length_histogram_check,
+        "topk_customers_per_nation": topk_customers_per_nation,
+        "train_val_test_split": train_val_test_split,
         "unigram_logprob": unigram_logprob_check,
+        "unpivot_lineitem_metrics": unpivot_lineitem_metrics,
+        "url_normalize_check": url_normalize_check,
         "video_frame_sample": video_frame_sample_check,
+        "vocab_coverage": vocab_coverage,
         "vocab_top_tokens": vocab_top_tokens,
-        "heavy_hitters_cms": heavy_hitters_cms,
-        "data_validation_report": data_validation_report,
-        "q10_returned_items": q10_returned_items,
-        "multimodal_features": multimodal_features,
-        "image_decode": image_decode,
-        "events_tier_rollup": events_tier_rollup,
-        "image_resize": image_resize,
-        "latest_event_per_user": latest_event_per_user,
-        "decontamination_check": decontamination_check,
-        "pack_sequences_check": pack_sequences_check,
-        "audio_features": audio_features,
+        "warc_extract": warc_extract_row,
         "wav_envelope_features": wav_envelope_features,
         "wav_g711_features": wav_g711_features,
-        "warc_extract": warc_extract_row,
-        "pdf_extract": pdf_extract_check,
-        "pdf_images": pdf_images_check,
-        "docx_extract": docx_extract_check,
-        "document_extract": document_extract_check,
-        "sitemap_extract": sitemap_extract_check,
-        "feed_extract": feed_extract_check,
-        "crawl_coverage": crawl_coverage_check,
-        "charset_decode": charset_decode_check,
-        "html_meta": html_meta_check,
         "webdataset_extract": webdataset_extract_row,
-        "exif_scrub": exif_scrub_check,
-        "robots_eval": robots_check,
-        "url_normalize_check": url_normalize_check,
-        "domain_rollup_urls": domain_rollup_urls,
-        "domain_quota_sample": domain_quota_sample_check,
-        "sentence_split": sentence_split_check,
-        "html_extract": html_extract_row,
-        "html_markdown": html_markdown_check,
-        "html_jsonld": html_jsonld_check,
-        "html_main_text": html_main_text_row,
-        "topk_customers_per_nation": topk_customers_per_nation,
-        "rollup_orders": rollup_orders,
-        "distinct_customers_per_segment": distinct_customers_per_segment,
-        "customers_without_orders": customers_without_orders,
-        "set_ops_customers": set_ops_customers,
-        "scalar_functions": scalar_functions,
+        "webp_decode": webp_decode_check,
+        "webp_frame_sample": webp_frame_sample_check,
+        "weighted_sample_docs": weighted_sample_docs,
+        "zorder_key_check": zorder_key_check,
+        "zorder_key_n": zorder_key_n,
     }
-    # Round-9 rotation (r8 verdict #3): iteration order IS the
-    # driver's 50-row correctness window, so lead with (1) the query
-    # new this round, (2) every query whose engine code or oracle
-    # changed in r9 — the seed-decorrelated clustering/PQ family, the
-    # neardup batch-twin slice filter, the hardened PNG decode path —
-    # then (3) the ENTIRE 33-row CORRECTNESS_r06 staleness tail, and
-    # (4) r07 stragglers to fill the window. After this round no
-    # query's oracle evidence is older than two rounds.
-    r9_window = [
-        # new in r9
-        "dedup_winnow",
-        "embedding_outliers",
-        "mmr_diverse_topk",
-        "zorder_key_check",
-        "heavy_hitters_cms",
-        "embedding_pca",
-        "dedup_keep_best",
-        "distinct_kmv",
-        "lang_id_trained",
-        "dsir_select",
-        "hybrid_search_rrf",
-        # seeding change: every query whose oracle replays train_centroids
-        "kmeans_clusters",
-        "kmeans_tiered",
-        "semdedup_prune",
-        "ann_topk_pq",
-        "ann_topk_pq_rerank",
-        # neardup batch-twin exact-slice filter
-        "neardup_time_horizon",
-        # r06 staleness tail — all 33
-        "embedding_near_dup",
-        "bloom_decontamination",
-        "bpe_merge_candidates",
-        "classifier_trained",
-        "token_length_histogram",
-        "boilerplate_removal",
-        "classifier_score_docs",
-        "gopher_quality_rules",
-        "bm25_search",
-        "bigram_logprob",
-        "tfidf_top_terms",
-        "weighted_sample_docs",
-        "quota_sample_sources",
-        "chunk_documents",
-        "unigram_logprob",
-        "video_frame_sample",
-        "vocab_top_tokens",
-        "data_validation_report",
-        "q10_returned_items",
-        "multimodal_features",
-        "image_decode",
-        "events_tier_rollup",
-        "image_resize",
-        "latest_event_per_user",
-        "decontamination_check",
-        "pack_sequences_check",
-        "audio_features",
-        "topk_customers_per_nation",
-        "rollup_orders",
-        "distinct_customers_per_segment",
-        "customers_without_orders",
-        "set_ops_customers",
-        "scalar_functions",
-        # --- below the 50-row cutoff (the three wave-5 ops displaced
-        # them; all r08-checked, so ≤1 round old after r9, and each r9
-        # change was re-verified locally + fuzz: neardup_estimate runs
-        # the same slice-checked batch twin neardup_time_horizon
-        # covers IN-window; the PNG hardening is refusal-only (happy
-        # path byte-identical, media fuzz gate green); multimodal_decode
-        # is the rows-only courtesy row; ann_topk_ivfpq's seed-rule
-        # change is exercised in-window by ann_topk_pq + pq_rerank,
-        # which share its oracle CTE family, and its composition is
-        # unchanged since the r08 exact hash-match) — r10 heads ---
-        "neardup_estimate",
-        "png_color_decode",
-        "multimodal_decode",
-        "ann_topk_ivfpq",
-        # r07 stragglers
-        "approx_distinct_check",
-        "approx_quantile_check",
-        "common_passages",
-        "conditional_aggregation",
-        "date_arithmetic",
-        "dedup_connected_components",
-    ]
-    assert set(r9_window) <= set(q), sorted(set(r9_window) - set(q))
-    # Round-10 rotation (r9 verdict #1): lead with (a) the two queries
-    # new this round (trained-BPE encode; the xxh/md5 pair-set equality
-    # row), (b) every query whose engine code changed in r10 — the
-    # ADVICE hardening (outliers NULL/dim envelope, layout stat-less
-    # row groups, mmr generic id types) and the tokenizer="bpe" wiring
-    # (chunk_documents / pack_sequences / mixture_sample) — and (c) the
-    # ENTIRE 42-row CORRECTNESS_r07 staleness tail. That is exactly 50.
-    # The materialize() rewrite (localCheckpoint → reliable-checkpoint-
-    # aware helper) touched 9 modules but is behavior-preserving by
-    # construction in local mode (same localCheckpoint call under no
-    # checkpoint dir), pinned bit-identical in tests/test_materialize.py
-    # and swept by fuzz seeds 71-76; dedup_minhash_lsh rides in-window
-    # as that class's representative (its oracle also backs the new
-    # pair-set row). After this round no query's oracle evidence is
-    # older than two rounds (the 47 r08 rows are next round's tail).
-    # line_dedup_firstkeep, bpe_roundtrip and hilbert_key_check (added
-    # post-close) stay BELOW the window — the knapsack above is locked
-    # to the staleness bar — each pre-verified exact at
-    # sf0.001/0.01/0.1 + fuzz seeds 81/82 (line dedup), 83 (roundtrip),
-    # 84 (hilbert, NULL keys); they head r11.
-    #
-    # r11 window pre-solve: 47-row r08 staleness tail + these 3 new
-    # rows = EXACTLY 50. The two other rows whose code/oracle moved in
-    # r10s4 (media_from_text NULL-payload fix -> multimodal_decode,
-    # multimodal_features + its oracle) do NOT need window slots: the
-    # change is provably inert on the driver corpora (sf* documents
-    # carry no NULL text, and both oracles are identical there — the
-    # NULL case is exactly what fuzz seed 88 covers, re-run green),
-    # and multimodal_decode is the rows-only count check (count
-    # unchanged). Displacing r08-tail rows for them would break the
-    # no-evidence-older-than-two-rounds bar for no information gain.
-    r10_window = [
-        # (a) new in r10
-        "bpe_encode_docs",
-        "minhash_xxh_pairset",
-        # (b) engine code changed in r10
-        "embedding_outliers",
-        "zorder_key_check",
-        "mmr_diverse_topk",
-        "chunk_documents",
-        "pack_sequences_check",
-        "dedup_minhash_lsh",
-        # (c) the 42-row r07 staleness tail
-        "pivot_order_status",
-        "grouping_sets_orders",
-        "exists_subquery",
-        "running_revenue_window",
-        "percentiles_by_segment",
-        "min_max_by_nation",
-        "conditional_aggregation",
-        "date_arithmetic",
-        "string_functions",
-        "range_join_value_bands",
-        "dedup_ngram_dfcut",
-        "pipe_subprocess",
-        "dedup_connected_components",
-        "sample_hash_10pct",
-        "train_val_test_split",
-        "approx_distinct_check",
-        "approx_quantile_check",
-        "events_tumbling_window",
-        "events_sessionization",
-        "events_topk_users",
-        "events_lead_lag",
-        "events_sliding_window",
-        "events_interval_join",
-        "events_asof_join",
-        "q07_volume_shipping",
-        "q08_market_share",
-        "q09_product_profit",
-        "q11_important_suppliers",
-        "q12_late_shipments",
-        "q13_customer_distribution",
-        "q15_top_supplier",
-        "q16_part_supplier_counts",
-        "q17_small_quantity_revenue",
-        "q19_discounted_revenue",
-        "q20_excess_suppliers",
-        "q21_waiting_orders",
-        "jpeg_color_decode",
-        "common_passages",
-        "fuzzy_decontamination",
-        "repeated_span_removal",
-        "normalize_text",
-        "mixture_sample",
-    ]
-    assert len(r10_window) == 50, len(r10_window)
-    assert set(r10_window) <= set(q), sorted(set(r10_window) - set(q))
-    # Round-11 rotation (r10 verdict #1, executing the pre-solve):
-    # the ENTIRE 46-row r08 staleness tail (the verdict counted 47;
-    # the aggregate CORRECTNESS_r01-r10 latest-evidence histogram says
-    # 46 — recounted this round, r8:46 / r9:45 / r10:50) + the 3 rows
-    # added post-r10-close (line_dedup_firstkeep, bpe_roundtrip,
-    # hilbert_key_check — each judge-verified exact in the r10
-    # session) = 49, leaving ONE slot for the round's flagship new
-    # row: ann_topk_ivfpq_residual (r10 verdict #2, oracle-verified
-    # exact at sf0.01 + fuzz seeds 102/103 locally). After this round
-    # no query's driver evidence is older than two rounds.
-    #
-    # r11 engine-code changes and why their evidence holds without a
-    # slot: (a) the nl>0 lined-view guard (r10 ADVICE) touches
-    # line_dedup_firstkeep + boilerplate_removal — the first is
-    # IN-window, the second is provably inert on sf corpora (min text
-    # len 48 → nl ≥ 1; hostile case = fuzz seeds 81/82/88/101, run
-    # green) and last checked r09; (b) bpe_encode's foreign-vocab
-    # refusal is an error-path-only change (happy path untouched,
-    # bpe_roundtrip IN-window exercises the trained path end-to-end);
-    # (c) the file-sink layout refusal is spec-surface-only (no driver
-    # query writes through it).
-    #
-    # r12 window pre-solve: the 45-row r09 staleness tail + FIVE of
-    # the six rows new in r11 (jpeg_420_decode; zorder_key_n — r10
-    # verdict #7; ann_topk_ivf_kmeans + ann_topk_ivfpq_residual_k —
-    # kmeans coarse quantizer; ann_topk_lsh_mp — multi-probe LSH) =
-    # EXACTLY 50. Every new row is pre-verified exact at sf0.01 +
-    # fuzzed (seeds 102-111). The sixth new row, ann_index_roundtrip,
-    # stays below the r12 window and heads r13: its oracle is
-    # LITERALLY ann_topk_ivfpq's SQL (the round trip must equal the
-    # inline operator) and that row is in THIS round's window — plus
-    # the equality is pinned by test_ivfpq_index_persist_equals_inline
-    # and fuzz seed 111 — so a driver slot adds the least information
-    # of the six. The r11s2 fused codebook trainer
-    # (train_subspace_codebooks) touched pq_topk/ivfpq_topk engine
-    # code whose driver rows (ann_topk_pq, ann_topk_pq_rerank) sit
-    # outside the r11 window — conveniently BOTH are in the r09
-    # staleness tail, so the r12 window re-checks them by
-    # construction; meanwhile the change is pinned BIT-IDENTICAL to
-    # the old per-subspace loop (test_fused_subspace_codebooks_equal)
-    # and all five PQ-family oracle rows re-verified exact locally +
-    # fuzz seed 107.
-    r11_window = [
-        # (a) new in r11
-        "ann_topk_ivfpq_residual",
-        # (b) post-r10-close rows (judge-verified exact, first driver check)
-        "line_dedup_firstkeep",
-        "bpe_roundtrip",
-        "hilbert_key_check",
-        # (c) the 46-row r08 staleness tail
-        "ann_topk_bruteforce",
-        "ann_topk_ivf",
-        "ann_topk_ivfpq",
-        "ann_topk_lsh",
-        "category_drift",
-        "compression_quality",
-        "corpus_quality_gate",
-        "curriculum_buckets",
-        "dataset_drift",
-        "dedup_exact",
-        "dedup_incremental",
-        "dedup_minhash_xxh",
-        "dedup_ngram_jaccard",
-        "dedup_ngram_sampled",
-        "dedup_simhash",
-        "dedup_simhash_hamming",
-        "doc_repetition",
-        "embedding_quant_dedup",
-        "events_json_extract",
-        "jpeg_decode",
-        "multimodal_decode",
-        "neardup_estimate",
-        "null_semantics",
-        "pii_redaction",
-        "pipe_regex_replace",
-        "pipe_regex_select",
-        "pipe_regex_split",
-        "pipe_replace",
-        "pipeline_chain",
-        "png_color_decode",
-        "q01_pricing_summary",
-        "q02_min_cost_part",
-        "q03_shipping_priority",
-        "q04_order_priority",
-        "q05_region_revenue",
-        "q06_forecast_revenue",
-        "q14_promo_revenue",
-        "q18_large_orders",
-        "q22_idle_customers",
-        "scalar_subquery_above_avg",
-        "source_quality_rollup",
-        "stratified_sample",
-        "text_quality",
-        "text_stats",
-        "unpivot_lineitem_metrics",
-        "vocab_coverage",
-    ]
-    assert len(r11_window) == 50, len(r11_window)
-    assert set(r11_window) <= set(q), sorted(set(r11_window) - set(q))
-    # Round-12 rotation (r11 verdict #1 — EXECUTING the pre-solve above):
-    # the five never-driver-checked r11 rows + the complete 45-row r09
-    # staleness tail (recomputed this round from CORRECTNESS_r01-r11:
-    # latest-evidence histogram r09:45 / r10:50 / r11:50) = exactly 50.
-    # ann_index_roundtrip stays below the window and heads r13 (its
-    # oracle is literally ann_topk_ivfpq's SQL; equality pinned by
-    # test_ivfpq_index_persist_equals_inline + fuzz seed 111). After
-    # this round no row's driver evidence is older than two rounds.
-    #
-    # r13 window pre-solve (updated r12s4): TWENTY-ONE rows with no
-    # driver evidence (the nineteen below + exif_scrub and robots_eval,
-    # each oracle-exact + fuzzed, seeds 129/131) + 29 of the r10 tail
-    # = exactly 50.
-    # Previous count, kept for the session record: NINETEEN rows with no
-    # driver evidence yet — ann_index_roundtrip (deferred from r12 per
-    # the rationale above), the four first-wave r12 rows
-    # (jpeg_progressive_decode, png_palette_decode,
-    # wav_envelope_features, decode_coverage; fuzz seeds 112-117), and
-    # the FOURTEEN rows new in the r12 fourth session (html_extract,
-    # html_main_text, html_meta, warc_extract, charset_decode,
-    # webdataset_extract, wav_g711_features, url_normalize_check,
-    # domain_rollup_urls, gif_decode, gif_frame_sample, bmp_decode,
-    # image_dhash, image_near_dup — each oracle-verified exact locally
-    # at sf0.01 and fuzzed, seeds 115-128) — plus 31 of the 50-row r10
-    # staleness tail = exactly 50. Prefer squeezing out r10-tail rows
-    # whose engine paths are shared with in-window twins
-    # (events_sliding_window ↔ tumbling, and the q0x analog pairs);
-    # the squeezed rows head r14. Recompute the r10 tail from
-    # CORRECTNESS_r01-r12 at r13 start — same histogram recipe as this
-    # round's rotation.
-    r12_window = [
-        # (a) new in r11, judge-verified exact in the r11 session,
-        #     first driver check now
-        "jpeg_420_decode",
-        "zorder_key_n",
-        "ann_topk_ivf_kmeans",
-        "ann_topk_ivfpq_residual_k",
-        "ann_topk_lsh_mp",
-        # (b) the 45-row r09 staleness tail
-        "ann_topk_pq",
-        "ann_topk_pq_rerank",
-        "audio_features",
-        "bigram_logprob",
-        "bloom_decontamination",
-        "bm25_search",
-        "boilerplate_removal",
-        "bpe_merge_candidates",
-        "classifier_score_docs",
-        "classifier_trained",
-        "customers_without_orders",
-        "data_validation_report",
-        "decontamination_check",
-        "dedup_keep_best",
-        "dedup_winnow",
-        "distinct_customers_per_segment",
-        "distinct_kmv",
-        "dsir_select",
-        "embedding_near_dup",
-        "embedding_pca",
-        "events_tier_rollup",
-        "gopher_quality_rules",
-        "heavy_hitters_cms",
-        "hybrid_search_rrf",
-        "image_decode",
-        "image_resize",
-        "kmeans_clusters",
-        "kmeans_tiered",
-        "lang_id_trained",
-        "latest_event_per_user",
-        "multimodal_features",
-        "neardup_time_horizon",
-        "q10_returned_items",
-        "quota_sample_sources",
-        "rollup_orders",
-        "scalar_functions",
-        "semdedup_prune",
-        "set_ops_customers",
-        "tfidf_top_terms",
-        "token_length_histogram",
-        "topk_customers_per_nation",
-        "unigram_logprob",
-        "video_frame_sample",
-        "vocab_top_tokens",
-        "weighted_sample_docs",
-    ]
-    assert len(r12_window) == 50, len(r12_window)
-    assert set(r12_window) <= set(q), sorted(set(r12_window) - set(q))
-    # Round-13 rotation (r12 verdict #1 — EXECUTING the pre-solve above):
-    # the TWENTY-ONE rows with no driver CORRECTNESS evidence (every row
-    # new in r12 plus the deferred ann_index_roundtrip — all 21 were
-    # independently re-run by the r12 judge against the DuckDB oracle,
-    # 21/21 exact-PASS) + 29 of the 50-row r10 staleness tail
-    # (recomputed this round from CORRECTNESS_r01-r12 by the standing
-    # histogram recipe: r10:50 / r11:50 / r12:50, 150 evidenced of 171)
-    # = exactly 50.  The 21 squeezed r10-tail rows head the r14 window;
-    # per the pre-solve they are the rows whose ENGINE PATHS are shared
-    # with an in-window (or ≤1-round-stale) twin, so the paths stay
-    # covered even while the rows wait:
-    #   events_sliding_window (↔ events_tumbling_window, in-window),
-    #   events_lead_lag + events_topk_users (↔ running_revenue_window
-    #     in-window + topk_customers_per_nation r12 — same window-
-    #     function/rank engine), jpeg_color_decode (↔
-    #     jpeg_progressive_decode in-window + jpeg_420_decode r12),
-    #   zorder_key_check (↔ zorder_key_n r12), minhash_xxh_pairset
-    #     (↔ dedup_minhash_lsh in-window; minhash_xxh r12),
-    #   approx_quantile_check (↔ approx_distinct_check in-window —
-    #     same sketch battery), sample_hash_10pct (↔
-    #     train_val_test_split in-window — same hash-split family),
-    #   bpe_encode_docs (↔ bpe_merge_candidates r12 + bpe_roundtrip
-    #     r11), date_arithmetic + string_functions + conditional_
-    #     aggregation (↔ scalar_functions r12 — expression batteries),
-    #   exists_subquery (↔ scalar_subquery_above_avg r11 +
-    #     customers_without_orders r12 — semi/anti-join engine),
-    #   q07/q09/q11/q12/q15/q16/q19/q21 (relational-analog family;
-    #     the four structurally distinct analogs q08 multi-join,
-    #     q13 outer-join-count, q17 correlated scalar subquery,
-    #     q20 nested subqueries STAY in-window).
-    r13_window = [
-        # (a) the 21 never-driver-checked rows (r12 judge: 21/21 exact)
-        "ann_index_roundtrip",
-        "bmp_decode",
-        "charset_decode",
-        "decode_coverage",
-        "domain_rollup_urls",
-        "exif_scrub",
-        "gif_decode",
-        "gif_frame_sample",
-        "html_extract",
-        "html_main_text",
-        "html_meta",
-        "image_dhash",
-        "image_near_dup",
-        "jpeg_progressive_decode",
-        "png_palette_decode",
-        "robots_eval",
-        "url_normalize_check",
-        "warc_extract",
-        "wav_envelope_features",
-        "wav_g711_features",
-        "webdataset_extract",
-        # (b) 29 of the r10 staleness tail (shared-path twins squeezed
-        #     to r14, see rationale above)
-        "approx_distinct_check",
-        "chunk_documents",
-        "common_passages",
-        "dedup_connected_components",
-        "dedup_minhash_lsh",
-        "dedup_ngram_dfcut",
-        "embedding_outliers",
-        "events_asof_join",
-        "events_interval_join",
-        "events_sessionization",
-        "events_tumbling_window",
-        "fuzzy_decontamination",
-        "grouping_sets_orders",
-        "min_max_by_nation",
-        "mixture_sample",
-        "mmr_diverse_topk",
-        "normalize_text",
-        "pack_sequences_check",
-        "percentiles_by_segment",
-        "pipe_subprocess",
-        "pivot_order_status",
-        "q08_market_share",
-        "q13_customer_distribution",
-        "q17_small_quantity_revenue",
-        "q20_excess_suppliers",
-        "range_join_value_bands",
-        "repeated_span_removal",
-        "running_revenue_window",
-        "train_val_test_split",
-    ]
-    assert len(r13_window) == 50, len(r13_window)
-    assert set(r13_window) <= set(q), sorted(set(r13_window) - set(q))
-    # r14 window pre-solve (updated r13 close): the 21 squeezed
-    # r10-tail rows above + the ELEVEN rows new in r13 with no driver
-    # evidence yet (crawl_coverage, image_auto_orient, pdf_extract,
-    # html_markdown, sitemap_extract, docx_extract, document_extract,
-    # html_jsonld, feed_extract, domain_quota_sample, sentence_split —
-    # each oracle-verified exact at sf0.01 and fuzzed, seeds 142-158;
-    # grand fuzz 152/156 cover the battery) = 32, + 18 of the r11
-    # staleness tail by the standing histogram recipe (recompute from
-    # CORRECTNESS_r01-r13 at r14 start; expected histogram after this
-    # round: r10:21, r11:50, r12:50, r13:50, never:11). Prefer
-    # squeezing r11-tail rows whose engine paths have in-window twins,
-    # as this round did for the r10 tail.
-    #
-    # Round-14 rotation (r13 verdict #1 — EXECUTING the pre-solve above):
-    # (a) the ELEVEN rows new in r13 with no driver evidence (r13 judge
-    # independently re-ran all 11 against the DuckDB oracle: 11/11
-    # exact-PASS), + (b) the full 21-row r10 staleness tail (verdict #6:
-    # flush it regardless of new-surface pressure), + (c) 18 of the
-    # 50-row r11 tail chosen by the standing twin recipe = exactly 50.
-    # The 32 squeezed r11 rows all have an in-window or ≤1-round-stale
-    # twin on the same engine path:
-    #   q01-q06/q14/q18/q22 (↔ q07/q09/q11/q12/q15/q16/q19/q21
-    #     in-window — relational-analog family; the four structurally
-    #     distinct r11 analogs have in-window counterparts),
-    #   jpeg_decode + png_color_decode + multimodal_decode (↔
-    #     jpeg_color_decode in-window — same codec battery),
-    #   hilbert_key_check (↔ zorder_key_check in-window),
-    #   bpe_roundtrip + vocab_coverage (↔ bpe_encode_docs in-window),
-    #   dedup_minhash_xxh + neardup_estimate (↔ minhash_xxh_pairset
-    #     in-window), dedup_ngram_sampled (↔ dedup_ngram_jaccard
-    #     in-window), dedup_simhash_hamming (↔ dedup_simhash in-window),
-    #   dedup_incremental (↔ dedup_exact in-window),
-    #   stratified_sample (↔ sample_hash_10pct in-window),
-    #   scalar_subquery_above_avg (↔ exists_subquery in-window),
-    #   events_json_extract (↔ events_sliding_window in-window),
-    #   null_semantics (↔ conditional_aggregation in-window),
-    #   line_dedup_firstkeep (↔ common_passages/repeated_span r13),
-    #   text_stats (↔ text_quality in-window), source_quality_rollup
-    #     (↔ corpus_quality_gate in-window), category_drift (↔
-    #     dataset_drift in-window), curriculum_buckets (↔
-    #     mixture_sample r13), embedding_quant_dedup (↔
-    #     embedding_outliers r13), unpivot_lineitem_metrics (↔
-    #     pivot_order_status r13), pipe_replace (↔ pipeline_chain
-    #     in-window — same replace engine).
-    # New r14 rows (dedup_minhash_cjk per verdict #2; any codec/crawl
-    # additions) are appended to slot (d) as they land, displacing the
-    # most-twinned (c) rows in this order: dedup_ngram_jaccard (twin
-    # dedup_ngram_dfcut r13), ann_topk_ivf (twin ann_index_roundtrip
-    # r13), text_quality (twin corpus_quality_gate stays in-window).
-    r14_window = [
-        # (a) the 11 never-driver-checked r13 rows (judge: 11/11 exact)
-        "crawl_coverage",
-        "docx_extract",
-        "document_extract",
-        "domain_quota_sample",
-        "feed_extract",
-        "html_jsonld",
-        "html_markdown",
-        "image_auto_orient",
-        "pdf_extract",
-        "sentence_split",
-        "sitemap_extract",
-        # (b) the full 21-row r10 staleness tail
-        "approx_quantile_check",
-        "bpe_encode_docs",
-        "conditional_aggregation",
-        "date_arithmetic",
-        "events_lead_lag",
-        "events_sliding_window",
-        "events_topk_users",
-        "exists_subquery",
-        "jpeg_color_decode",
-        "minhash_xxh_pairset",
-        "q07_volume_shipping",
-        "q09_product_profit",
-        "q11_important_suppliers",
-        "q12_late_shipments",
-        "q15_top_supplier",
-        "q16_part_supplier_counts",
-        "q19_discounted_revenue",
-        "q21_waiting_orders",
-        "sample_hash_10pct",
-        "string_functions",
-        "zorder_key_check",
-        # (c) 18 of the r11 staleness tail (no-twin preference)
-        "ann_topk_bruteforce",
-        "ann_topk_lsh",
-        "ann_topk_ivfpq",
-        "ann_topk_ivfpq_residual",
-        "compression_quality",
-        "pii_redaction",
-        "dedup_exact",
-        "dedup_simhash",
-        "text_quality",
-        "corpus_quality_gate",
-        "dataset_drift",
-        "doc_repetition",
-        "pipeline_chain",
-        "pipe_regex_replace",
-        "pipe_regex_select",
-        "pipe_regex_split",
-        # (d) new/re-pinned r14 rows (each displaced a (c) row per the
-        # order above: dedup_minhash_cjk displaced dedup_ngram_jaccard
-        # — twin dedup_ngram_dfcut r13 + the in-window minhash family;
-        # gif_frame_sample re-pins because its r13 evidence predates
-        # the disposal-3 fixture legs — it displaced ann_topk_ivf,
-        # twin ann_index_roundtrip r13 + ann_topk_ivfpq in-window)
-        "dedup_minhash_cjk",
-        "gif_frame_sample",
-    ]
-    assert len(r14_window) == 50, len(r14_window)
-    assert set(r14_window) <= set(q), sorted(set(r14_window) - set(q))
-    # r15 window pre-solve: after this round the histogram is r11:34,
-    # r12:50, r13:49, r14:50 (contract 183; never:0 — every r14
-    # addition took an in-window slot, unlike the r13 wave). Flush the
-    # FULL 34-row r11 tail (ann_topk_ivf + ann_topk_pq twins,
-    # bpe_roundtrip, the q01-q22 analogs squeezed this round,
-    # jpeg/png/multimodal decode twins, dedup_minhash_xxh,
-    # hilbert_key_check, stratified_sample, scalar_subquery_above_avg,
-    # events_json_extract, null_semantics, the drift/quality twins,
-    # unpivot_lineitem_metrics, pipe_replace, …) + 16 of the r12 tail
-    # by the standing twin recipe (recompute from CORRECTNESS_r01-r14
-    # at r15 start; prefer squeezing r12 rows whose engine paths have
-    # in-window or r13/r14 twins). Any new r15 rows take slots from
-    # the r12 half, never the r11 flush.
-    # Round-15 rotation (r14 verdict #1 — EXECUTING the pre-solve above):
-    # (a) the FULL 34-row r11 staleness tail (flushed regardless of
-    # new-surface pressure, per the standing contract), + (b) 12 of the
-    # 50-row r12 tail chosen by the standing twin recipe — priority to
-    # rows whose ENGINE PATH CHANGED in r14 without a re-pin (the
-    # tokenize= threading touched unigram_logprob / tfidf_top_terms /
-    # vocab_top_tokens / decontamination_check / bloom_decontamination)
-    # and to ann_topk_lsh_mp ahead of this round's multiprobe default
-    # flip (verdict #5), then engines with no fresh twin (winnow, bm25,
-    # trained classifier, trained langid, KMV sketch, audio features),
-    # + (c) 4 new/re-pinned r15 rows = exactly 50.
-    # The 38 squeezed r12 rows all have an in-window or ≤2-round-stale
-    # twin on the same engine path:
-    #   q10/rollup_orders/scalar_functions/set_ops_customers/
-    #     topk_customers_per_nation/customers_without_orders/
-    #     distinct_customers_per_segment/latest_event_per_user/
-    #     events_tier_rollup (↔ q01-q22 analog family in-window),
-    #   ann_topk_pq + ann_topk_pq_rerank + ann_topk_ivf_kmeans +
-    #     ann_topk_ivfpq_residual_k (↔ ann_topk_ivf in-window +
-    #     ann_topk_ivfpq/_residual r14),
-    #   image_decode + image_resize + jpeg_420_decode +
-    #     multimodal_features + video_frame_sample (↔ jpeg_decode +
-    #     png_color_decode + multimodal_decode in-window +
-    #     gif_frame_sample r14),
-    #   bigram_logprob (↔ unigram_logprob in-window),
-    #   bpe_merge_candidates (↔ bpe_roundtrip in-window),
-    #   classifier_score_docs (↔ classifier_trained in-window),
-    #   data_validation_report (↔ null_semantics in-window),
-    #   dedup_keep_best (↔ line_dedup_firstkeep + dedup_minhash_xxh
-    #     in-window), dedup_winnow stays IN-window (own engine),
-    #   dsir_select + quota_sample_sources + weighted_sample_docs (↔
-    #     stratified_sample in-window + domain_quota_sample r14),
-    #   embedding_near_dup + embedding_pca + semdedup_prune +
-    #     kmeans_clusters* + kmeans_tiered (↔ embedding_quant_dedup
-    #     in-window; *kmeans_clusters displaced last, see (d)),
-    #   gopher_quality_rules + token_length_histogram (↔ text_stats +
-    #     source_quality_rollup in-window),
-    #   neardup_time_horizon (↔ dedup_incremental + neardup_estimate
-    #     in-window), zorder_key_n (↔ hilbert_key_check in-window),
-    #   boilerplate_removal (↔ html_markdown r14),
-    #   heavy_hitters_cms (↔ distinct_kmv in-window),
-    #   hybrid_search_rrf (↔ bm25_search in-window).
-    r15_window = [
-        # (a) the full 34-row r11 staleness tail
-        "ann_topk_ivf",
-        "bpe_roundtrip",
-        "category_drift",
-        "curriculum_buckets",
-        "dedup_incremental",
-        "dedup_minhash_xxh",
-        "dedup_ngram_jaccard",
-        "dedup_ngram_sampled",
-        "dedup_simhash_hamming",
-        "embedding_quant_dedup",
-        "events_json_extract",
-        "hilbert_key_check",
-        "jpeg_decode",
-        "line_dedup_firstkeep",
-        "multimodal_decode",
-        "neardup_estimate",
-        "null_semantics",
-        "pipe_replace",
-        "png_color_decode",
-        "q01_pricing_summary",
-        "q02_min_cost_part",
-        "q03_shipping_priority",
-        "q04_order_priority",
-        "q05_region_revenue",
-        "q06_forecast_revenue",
-        "q14_promo_revenue",
-        "q18_large_orders",
-        "q22_idle_customers",
-        "scalar_subquery_above_avg",
-        "source_quality_rollup",
-        "stratified_sample",
-        "text_stats",
-        "unpivot_lineitem_metrics",
-        "vocab_coverage",
-        # (b) 12 of the r12 staleness tail (twin recipe above)
-        "ann_topk_lsh_mp",
-        "audio_features",
-        "bloom_decontamination",
-        "bm25_search",
-        "classifier_trained",
-        "dedup_winnow",
-        "distinct_kmv",
-        "lang_id_trained",
-        "tfidf_top_terms",
-        "unigram_logprob",
-        "vocab_top_tokens",
-        # (d) new/re-pinned r15 rows (each displaced a most-twinned
-        # (b) candidate, displacement order: boilerplate_removal →
-        # heavy_hitters_cms → hybrid_search_rrf → kmeans_clusters):
-        # crawl_coverage re-pins (zstd Content-Encoding leg + the
-        # unknown-coding refusal re-pointed to `compress`, verdict #2);
-        # dedup_minhash_cjk re-pins (mixed Latin+Han single-doc leg,
-        # verdict #8); compression_quality re-pins (rows-only →
-        # constrained oracle, verdict #6); webp_decode is new (VP8L
-        # from-spec, verdict #3).
-        "crawl_coverage",
-        "dedup_minhash_cjk",
-        "compression_quality",
-        # slot 4: webp_decode landed (VP8L from-spec, verdict #3) and
-        # takes the slot that kmeans_clusters was holding
-        "webp_decode",
-        # slot 5 (r15 late): pdf_images is NEW this round and must be
-        # driver-evidenced in its landing round; it displaces the 5th
-        # (b)-candidate decontamination_check, whose engine path stays
-        # evidenced in-window through its tokenize-threaded twin
-        # bloom_decontamination (decontamination_check itself rejoins
-        # in the r16 flush)
-        "pdf_images",
-    ]
-    assert len(r15_window) == 50, len(r15_window)
-    assert set(r15_window) <= set(q), sorted(set(r15_window) - set(q))
-    # r16 window pre-solve: after this round the histogram is r12:39
-    # (incl. the displaced decontamination_check), r13:49, r14:47,
-    # r15:50, never:2 (webp_frame_sample, tiff_decode — landed after
-    # the r15 window froze at 50; both locally exact at
-    # sf0.001/sf0.01 + fuzz seeds 213/215). Contract 187 incl.
-    # webp_decode + pdf_images + webp_frame_sample + tiff_decode.
-    # r16 window = the two never-checked rows FIRST + the FULL 39-row
-    # r12 tail + 9 of the r13 tail by the standing twin recipe
-    # (recompute from CORRECTNESS_r01-r15 at r16 start; prefer
-    # squeezing r13 rows whose engine paths have in-window or r14/r15
-    # twins). Any new r16 rows take slots from the r13 half, never
-    # the r12 flush or the never-checked slots.
-    # Round-16 rotation (EXECUTING the pre-solve above; histogram
-    # recomputed from CORRECTNESS_r01-r15 at r16 start and it matches
-    # the pre-solve exactly — never:2, r12:39, r13:49, r14:47,
-    # r15:50): (a) the two never-driver-checked rows FIRST
-    # (webp_frame_sample, tiff_decode — landed after the r15 window
-    # froze; locally exact + fuzz seeds 213/215), (b) the FULL 39-row
-    # r12 staleness tail (flushed regardless of new-surface pressure,
-    # per the standing contract — incl. decontamination_check, which
-    # the r15 late-landing displaced), + (c) 9 slots from the r13
-    # half by the standing twin recipe, priority to rows whose ENGINE
-    # PATH CHANGED in r16 without a re-pin:
-    #   dedup_connected_components (star-CC window rewrite + signature
-    #     convergence, r16), mmr_diverse_topk / image_dhash /
-    #     image_near_dup / ann_index_roundtrip (vector-kernel fan-out
-    #     resizing, r16), minhash_xxh_pairset (last r14; the r16
-    #     dual-engine shared-shingle rewrite re-pins it — takes an
-    #     (c) slot per the "new r16 rows take r13-half slots" rule),
-    #   then engines with NO fresh twin: dedup_minhash_lsh (the md5
-    #     HEADLINE chain itself), fuzzy_decontamination (own
-    #     decontaminate.py verify engine; bloom_decontamination r15 is
-    #     a different algorithm), pipe_subprocess (the subprocess
-    #     processor — no twin anywhere in the contract).
-    # The 40 squeezed r13 rows all keep an in-window or ≤2-round twin:
-    #   events_* / q08 / q13 / q17 / q20 / window+join analogs (↔ the
-    #     q01-q22 + events analog family, r15), html_main_text /
-    #     html_meta / html_extract (↔ html_markdown r14 + feed/sitemap
-    #     r15), gif/bmp/png_palette/jpeg_progressive/charset decode
-    #     rows (↔ jpeg_decode + png_color_decode + webp_decode r15 +
-    #     the in-window media block), warc_extract / decode_coverage /
-    #     url_normalize_check / robots_eval / domain_rollup_urls (↔
-    #     crawl_coverage r15 + in-window sitemap family),
-    #   dedup_minhash_lsh stays IN-window (own slot), dedup_ngram_dfcut
-    #     (↔ dedup_ngram_jaccard + dedup_ngram_sampled r15),
-    #   wav_envelope_features (↔ audio_features r15 + wav_g711 twin),
-    #   chunk/pack/mixture/train_val (↔ bpe_roundtrip + curriculum +
-    #     stratified_sample r15), embedding_outliers (↔ in-window
-    #     embedding family + untouched engine), normalize_text /
-    #     repeated_span_removal / common_passages (↔ text_stats r15 +
-    #     in-window token_length/gopher rows).
-    r16_window = [
-        # (a) never driver-checked — go first
-        "webp_frame_sample",
-        "tiff_decode",
-        # (b) the full 39-row r12 staleness tail
-        "ann_topk_ivf_kmeans",
-        "ann_topk_ivfpq_residual_k",
-        "ann_topk_pq",
-        "ann_topk_pq_rerank",
-        "bigram_logprob",
-        "boilerplate_removal",
-        "bpe_merge_candidates",
-        "classifier_score_docs",
-        "customers_without_orders",
-        "data_validation_report",
-        "decontamination_check",
-        "dedup_keep_best",
-        "distinct_customers_per_segment",
-        "dsir_select",
-        "embedding_near_dup",
-        "embedding_pca",
-        "events_tier_rollup",
-        "gopher_quality_rules",
-        "heavy_hitters_cms",
-        "hybrid_search_rrf",
-        "image_decode",
-        "image_resize",
-        "jpeg_420_decode",
-        "kmeans_clusters",
-        "kmeans_tiered",
-        "latest_event_per_user",
-        "multimodal_features",
-        "neardup_time_horizon",
-        "q10_returned_items",
-        "quota_sample_sources",
-        "rollup_orders",
-        "scalar_functions",
-        "semdedup_prune",
-        "set_ops_customers",
-        "token_length_histogram",
-        "topk_customers_per_nation",
-        "video_frame_sample",
-        "weighted_sample_docs",
-        "zorder_key_n",
-        # (c) 9 r13-half slots: r16-touched engines + no-fresh-twin
-        "dedup_connected_components",
-        "mmr_diverse_topk",
-        "image_dhash",
-        "image_near_dup",
-        "ann_index_roundtrip",
-        "minhash_xxh_pairset",
-        "dedup_minhash_lsh",
-        "fuzzy_decontamination",
-        "pipe_subprocess",
-    ]
-    assert len(r16_window) == 50, len(r16_window)
-    assert set(r16_window) <= set(q), sorted(set(r16_window) - set(q))
-    # r17 window pre-solve: after this round the histogram is r13:42,
-    # r14:46, r15:50, r16:50 (contract 187; never:0 for the first
-    # time). r17 window = the FULL 42-row r13 tail + 8 of the r14
-    # tail by the standing twin recipe (recompute from
-    # CORRECTNESS_r01-r16 at r17 start; prefer squeezing r14 rows
-    # whose engine paths have in-window or r15/r16 twins). Any new
-    # r17 rows take slots from the r14 half, never the r13 flush.
-    ordered = {k: q[k] for k in r16_window} | {
-        k: v for k, v in q.items() if k not in r16_window
-    }
-    return ordered
+    window = correctness_window(list(q), last_checked_rounds(), PRIORITY)
+    assert len(window) == 50, len(window)
+    assert set(window) <= set(q), sorted(set(window) - set(q))
+    return {k: q[k] for k in window} | q
 
 
 # -------------------------------------------------------------- oracle SQL

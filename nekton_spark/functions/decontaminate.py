@@ -266,7 +266,7 @@ def fuzzy_contamination_pairs(
     md5 (oracle-parity) or xxhash64 (pure-JVM production) exactly as
     in minhash_lsh_pairs.
     """
-    from .dedup import band_rows, minhash_signatures
+    from .dedup import band_key, band_rows, minhash_signatures
     from .hashing import hash60
 
     r = band_rows(k, bands)  # validated: r=0 would be an all-pairs join
@@ -276,18 +276,12 @@ def fuzzy_contamination_pairs(
     esig = minhash_signatures(
         eval_df, text_col, id_col, k, shingle_n, hash=hash, tokenize=tokenize
     )
-    if hash == "xxhash64":
-        def band_key(b):
-            return F.xxhash64(F.concat_ws(",", F.slice("sig", b * r + 1, r)), F.lit(b))
-    else:
-        def band_key(b):
-            return hash60(F.concat_ws(",", F.slice("sig", b * r + 1, r)), 1000 + b)
 
     def banded(sig_df: DataFrame) -> DataFrame:
         return sig_df.select(
             "id",
             F.posexplode(
-                F.array(*[band_key(b) for b in range(bands)])
+                F.array(*[band_key(b, r, hash) for b in range(bands)])
             ).alias("band", "bh"),
         )
 

@@ -45,9 +45,8 @@ DEFAULT_BANDS = 8  # bands of 2 rows each
 
 
 def band_rows(k: int, bands: int) -> int:
-    """Validated rows-per-band for LSH banding (shared by
-    minhash_lsh_pairs and decontaminate.fuzzy_contamination_pairs —
-    the two band-key constructions must stay in lockstep).
+    """Validated rows-per-band for LSH banding (shared by every
+    :func:`band_key` caller).
 
     bands > k would give r = 0: every band key becomes the hash of an
     EMPTY signature slice — one constant bucket, i.e. an all-pairs
@@ -62,6 +61,19 @@ def band_rows(k: int, bands: int) -> int:
             f"(the trailing {k % bands} signature rows would be ignored)"
         )
     return k // bands
+
+
+def band_key(b: int, r: int, hash: str) -> Column:
+    """LSH bucket key of band ``b``: the hash of the ``sig`` column's
+    ``r``-long slice, salted by the band index. The one band key of
+    every banded-MinHash join (:func:`minhash_lsh_pairs`, its dual
+    twin, decontaminate.fuzzy_contamination_pairs). The md5 form is
+    what the DuckDB oracles replay; xxhash64 needs no oracle parity and
+    keeps the production path JVM-native (one xxhash64 per band)."""
+    sl = F.concat_ws(",", F.slice("sig", b * r + 1, r))
+    if hash == "xxhash64":
+        return F.xxhash64(sl, F.lit(b))
+    return hash60(sl, 1000 + b)
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -357,13 +369,20 @@ def _minhash_sigs_jvm(
     themselves, and the key (doc id) is unique hence skew-free. DuckDB
     has no xxhash64, so this engine is equivalence-tested against the
     md5 path instead of hash-matched."""
-    a_c, b_c = affine_consts(k)
     ex = df.select(
         F.col(id_col).alias("id"),
         F.explode(
             _shingles_expr(F.col(text_col), shingle_n, tokenize)
         ).alias("s"),
     )
+    return _affine_min_sigs(ex, k)
+
+
+def _affine_min_sigs(ex: DataFrame, k: int, *lead: Column) -> DataFrame:
+    """``(*lead, id, sig)`` from one ``(id, s)`` row per shingle: the
+    xxhash64 engine's signature aggregation, shared by
+    :func:`_minhash_sigs_jvm` and :func:`minhash_lsh_pairs_dual`."""
+    a_c, b_c = affine_consts(k)
     # base hash reduced below 2^40 so A*h0 + B stays under 2^60:
     # Spark wraps int64 overflow silently, which would corrupt minima
     h0 = F.pmod(F.xxhash64("s"), F.lit(H0_MOD))
@@ -377,7 +396,7 @@ def _minhash_sigs_jvm(
     return (
         hashed.groupBy("id")
         .agg(*[F.min(f"h{i}").alias(f"m{i}") for i in range(k)])
-        .select("id", F.array(*[f"m{i}" for i in range(k)]).alias("sig"))
+        .select(*lead, "id", F.array(*[f"m{i}" for i in range(k)]).alias("sig"))
     )
 
 
@@ -519,15 +538,6 @@ def minhash_lsh_pairs(
     sigs = minhash_signatures(
         df, text_col, id_col, k, shingle_n, hash=hash, tokenize=tokenize
     )
-    if hash == "xxhash64":
-        # band key needs no oracle parity — keep the production path
-        # fully JVM-native (one xxhash64 per band, no md5 anywhere)
-        def band_key(b):
-            return F.xxhash64(F.concat_ws(",", F.slice("sig", b * r + 1, r)), F.lit(b))
-    else:
-        def band_key(b):
-            return hash60(F.concat_ws(",", F.slice("sig", b * r + 1, r)), 1000 + b)
-
     # the self-join + verification would otherwise re-execute the whole
     # signature DAG per branch; signatures are tiny (id + k longs), so
     # materialize once (reliable-checkpoint-aware: set
@@ -535,7 +545,9 @@ def minhash_lsh_pairs(
     sigs = sigs.transform(materialize)
     banded = sigs.select(
         "id",
-        F.posexplode(F.array(*[band_key(b) for b in range(bands)])).alias("band", "bh"),
+        F.posexplode(
+            F.array(*[band_key(b, r, hash) for b in range(bands)])
+        ).alias("band", "bh"),
     )
     from .banding import salted_band_pairs
 
@@ -588,9 +600,18 @@ def minhash_lsh_pairs(
         .select("id", sh_col.alias("sh"))
         .transform(materialize)
     )
-    a = sh.alias("a")
-    b = sh.alias("b")
-    verified = (
+    return _verify_jaccard(cand, sh, sh, threshold)
+
+
+def _verify_jaccard(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact verify of candidate pairs ``(id_a, id_b)``: ``|∩|/|∪|``
+    of the ``(id, sh)`` hashed-shingle sets, kept at ≥ ``threshold``.
+    The one verify of :func:`minhash_lsh_pairs` and its dual twin."""
+    a = sh_a.alias("a")
+    b = sh_b.alias("b")
+    return (
         cand.join(a, F.col("id_a") == F.col("a.id"))
         .join(b, F.col("id_b") == F.col("b.id"))
         .select(
@@ -603,7 +624,6 @@ def minhash_lsh_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    return verified
 
 
 def minhash_lsh_pairs_dual(
@@ -626,9 +646,9 @@ def minhash_lsh_pairs_dual(
     - md5 signatures: Arrow kernel over the shingle arrays
       (:func:`_minhash_sig_from_sh_udf` — same body as the from-text
       kernel, minus the Python re-shingling);
-    - xxhash64 signatures: explode the pinned shingles → the same
-      codegen'd affine-min aggregation :func:`_minhash_sigs_jvm`
-      builds (its shingle expression is exactly what the pin holds);
+    - xxhash64 signatures: explode the pinned shingles → the
+      :func:`_affine_min_sigs` aggregation :func:`_minhash_sigs_jvm`
+      uses (its shingle expression is exactly what the pin holds);
     - ONE shared verify-set pass: the candidate-id union of both
       engines semi-joins the pinned shingles once and computes BOTH
       hashed-shingle sets (md5-h60 and xxhash64) in a single
@@ -637,9 +657,10 @@ def minhash_lsh_pairs_dual(
     Output is bit-identical per engine to two independent
     :func:`minhash_lsh_pairs` runs (pinned by
     ``test_minhash_dual_matches_independent_chains``): signatures
-    depend only on the shingle SET, band keys and the verify jaccard
-    expressions are copied verbatim, and the JVM-vs-Python shingle
-    parity is the ``test_hashed_shingles_udf`` battery's standing pin.
+    depend only on the shingle SET, both paths build their band keys
+    with :func:`band_key` and verify with :func:`_verify_jaccard`, and
+    the JVM-vs-Python shingle parity is the ``test_hashed_shingles_udf``
+    battery's standing pin.
 
     Scale shape: the shingle pin is ~(shingle_n ×) corpus text — the
     same order as the corpus scan each engine separately paid; at
@@ -667,51 +688,26 @@ def minhash_lsh_pairs_dual(
         "id",
         _minhash_sig_from_sh_udf(k)(F.col("sh")).alias("sig"),
     ).filter(F.col("sig").isNotNull())
-    a_c, b_c = affine_consts(k)
-    h0 = F.pmod(F.xxhash64("s"), F.lit(H0_MOD))
-    sig_xxh = (
-        shf.select("id", F.explode("sh").alias("s"))
-        .select(
-            "id",
-            *[
-                (F.lit(a_c[i]) * h0 + F.lit(b_c[i]))
-                .bitwiseAND(F.lit(REHASH_MASK))
-                .alias(f"h{i}")
-                for i in range(k)
-            ],
-        )
-        .groupBy("id")
-        .agg(*[F.min(f"h{i}").alias(f"m{i}") for i in range(k)])
-        .select(
-            F.lit(0).alias("eng"),
-            "id",
-            F.array(*[f"m{i}" for i in range(k)]).alias("sig"),
-        )
+    sig_xxh = _affine_min_sigs(
+        shf.select("id", F.explode("sh").alias("s")), k, F.lit(0).alias("eng")
     )
     sig_all = sig_xxh.union(sig_md5).transform(materialize)
 
-    # --- banding: per-engine band keys (verbatim minhash_lsh_pairs,
-    # branched on the engine tag), ONE self-join keyed
-    # (eng, band, bh) — a pair meets only inside its own engine's
-    # bucket space, so the per-engine candidate sets are exactly the
-    # two separate joins' — and ONE candidate pin.
+    # --- banding: per-engine band keys (branched on the engine tag),
+    # ONE self-join keyed (eng, band, bh) — a pair meets only inside
+    # its own engine's bucket space, so the per-engine candidate sets
+    # are exactly the two separate joins' — and ONE candidate pin.
     from .banding import salted_band_pairs
-
-    def band_key(b):
-        return F.when(
-            F.col("eng") == 0,
-            F.xxhash64(
-                F.concat_ws(",", F.slice("sig", b * r + 1, r)), F.lit(b)
-            ),
-        ).otherwise(
-            hash60(F.concat_ws(",", F.slice("sig", b * r + 1, r)), 1000 + b)
-        )
 
     banded = sig_all.select(
         "id",
         "eng",
         F.posexplode(
-            F.array(*[band_key(b) for b in range(bands)])
+            F.array(*[
+                F.when(F.col("eng") == 0, band_key(b, r, "xxhash64"))
+                .otherwise(band_key(b, r, "md5"))
+                for b in range(bands)
+            ])
         ).alias("band", "bh"),
     )
     cand_all = (
@@ -743,21 +739,12 @@ def minhash_lsh_pairs_dual(
     )
 
     def _verify(cand: DataFrame, hs_col: str) -> DataFrame:
-        a = shsets.select("id", F.col(hs_col).alias("sh")).alias("a")
-        b = shsets.select("id", F.col(hs_col).alias("sh")).alias("b")
-        return (
-            cand.join(a, F.col("id_a") == F.col("a.id"))
-            .join(b, F.col("id_b") == F.col("b.id"))
-            .select(
-                "id_a",
-                "id_b",
-                (
-                    F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
-                    / F.size(F.array_union("a.sh", "b.sh"))
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
+        # one projection per join side: a shared one renumbers the
+        # plan's attribute ids
+        def side() -> DataFrame:
+            return shsets.select("id", F.col(hs_col).alias("sh"))
+
+        return _verify_jaccard(cand, side(), side(), threshold)
 
     return _verify(cand_xxh, "hs_xxh"), _verify(cand_md5, "hs_md5")
 

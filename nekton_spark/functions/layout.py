@@ -105,7 +105,10 @@ def _footer_ranges(
     - every requested column is a numeric primitive (INT32/INT64/
       FLOAT/DOUBLE — footer min/max for these is exact by the format
       spec; no string truncation, and a double chunk containing NaN
-      gets no stats at all, so has_min_max ⇒ NaN-free exact).
+      gets no stats at all, so has_min_max ⇒ NaN-free exact) with no
+      logical type beyond a plain integer width. DATE, TIMESTAMP and
+      DECIMAL also ride INT32/INT64, but pyarrow returns their stats
+      as date/datetime/Decimal objects.
     - every row-group chunk of every file carries min/max (an
       all-NULL chunk has none → bail; the aggregate path handles it).
 
@@ -145,6 +148,7 @@ def _footer_ranges(
     mins: dict[str, float | int | None] = {c: None for c in cols}
     maxs: dict[str, float | int | None] = {c: None for c in cols}
     ok_types = {"INT32", "INT64", "FLOAT", "DOUBLE"}
+    ok_logical = {"NONE", "INT"}
     try:
         for f in files:
             md = pq.ParquetFile(unquote(urlparse(f).path)).metadata
@@ -152,6 +156,11 @@ def _footer_ranges(
                 md.schema.column(i).path: i for i in range(md.num_columns)
             }
             if any(c not in idx for c in cols):
+                return None
+            if any(
+                md.schema.column(idx[c]).logical_type.type not in ok_logical
+                for c in cols
+            ):
                 return None
             for rg in range(md.num_row_groups):
                 row_group = md.row_group(rg)

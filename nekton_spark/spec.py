@@ -142,7 +142,9 @@ def _restore_shuffle_on_termination(spark, query, prior_shuffle: str) -> None:
     Registered per ``run_spec`` streaming invocation; self-removing.
     Concurrent streaming specs restore in termination order (each
     captured its own ambient value at start — the same semantics the
-    raw conf set/restore always had)."""
+    raw conf set/restore always had). A query that already ended when
+    the listener is registered (a stream that died at startup) may
+    never deliver its termination event, so it is restored at once."""
     from pyspark.sql.streaming import StreamingQueryListener
 
     qid = str(query.id)
@@ -158,8 +160,10 @@ def _restore_shuffle_on_termination(spark, query, prior_shuffle: str) -> None:
             pass
 
         def onQueryTerminated(self, event):
-            if str(event.id) != qid:
-                return
+            if str(event.id) == qid:
+                self.restore()
+
+        def restore(self):
             try:
                 spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
             finally:
@@ -168,4 +172,7 @@ def _restore_shuffle_on_termination(spark, query, prior_shuffle: str) -> None:
                 except Exception:
                     pass
 
-    spark.streams.addListener(_Restore())
+    listener = _Restore()
+    spark.streams.addListener(listener)
+    if not query.isActive:
+        listener.restore()

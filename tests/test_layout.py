@@ -431,6 +431,54 @@ class TestFooterRanges:
         )
         assert _footer_ranges(df, ["a", "b"]) is None
 
+    def _write_arrow(self, spark, tmp_path, table):
+        """Write with pyarrow: INT64 TIMESTAMP and INT32 DATE columns
+        whose footer stats pyarrow returns as datetime/date objects."""
+        import pyarrow.parquet as pq
+
+        p = str(tmp_path / "t_arrow.parquet")
+        pq.write_table(table, p)
+        return spark.read.parquet(p)
+
+    def test_timestamp_column_falls_back(self, spark, tmp_path):
+        import datetime
+
+        import pyarrow as pa
+
+        from nekton_spark.functions.layout import _footer_ranges
+
+        ts = [datetime.datetime(2020, 1, 1) + datetime.timedelta(hours=i)
+              for i in range(10)]
+        df = self._write_arrow(spark, tmp_path, pa.table({
+            "id": pa.array(range(10), pa.int64()),
+            "a": pa.array(range(10), pa.int64()),
+            "ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
+        }))
+        assert _footer_ranges(df, ["a", "ts"]) is None
+        # the key still builds, through the min/max aggregate pre-pass
+        fast = {r.id: r.zv for r in z_value(df, "a", "ts").collect()}
+        slow = {
+            r.id: r.zv
+            for r in z_value(df.filter("id >= 0"), "a", "ts").collect()
+        }
+        assert fast == slow and len(fast) == 10
+
+    def test_date_column_falls_back(self, spark, tmp_path):
+        import datetime
+
+        import pyarrow as pa
+
+        from nekton_spark.functions.layout import _footer_ranges
+
+        days = [datetime.date(2020, 1, 1) + datetime.timedelta(days=i)
+                for i in range(10)]
+        df = self._write_arrow(spark, tmp_path, pa.table({
+            "a": pa.array(range(10), pa.int64()),
+            "d": pa.array(days, pa.date32()),
+        }))
+        assert _footer_ranges(df, ["a", "d"]) is None
+        assert _footer_ranges(df, ["a"]) == [(0.0, 9.0)]
+
     def test_hilbert_value_identical_on_footer_and_agg_paths(
         self, spark, tmp_path
     ):

@@ -534,6 +534,33 @@ output:
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
+    def test_stream_ended_before_listener_restores_at_once(
+        self, spark, tmp_path
+    ):
+        """A stream that is already over when the restore listener is
+        registered (one that died at startup) never delivers its
+        termination event to it: the conf is restored and the listener
+        removed right away, not leaked."""
+        from nekton_spark.spec import _restore_shuffle_on_termination
+
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        jstreams = spark._jsparkSession.streams()
+        n_listeners = len(jstreams.listListeners())
+        q = (
+            spark.readStream.format("rate").load()
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / "ckpt"))
+            .start()
+        )
+        q.stop()
+        try:
+            spark.conf.set("spark.sql.shuffle.partitions", "2")
+            _restore_shuffle_on_termination(spark, q, prev)
+            assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+            assert len(jstreams.listListeners()) == n_listeners
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
     def test_unknown_engine_option_refuses(self, spark):
         import pytest as _pt
 
