@@ -3659,15 +3659,14 @@ def classifier_score_check(spark, sf):
 # the reason. They lead the driver's correctness window; a change that
 # touches an engine path replaces this list with its own rows.
 PRIORITY = [
-    "zorder_key_check",  # layout footer stats skip logical-typed columns
-    "zorder_key_n",  # layout footer stats skip logical-typed columns
-    "hilbert_key_check",  # layout footer stats skip logical-typed columns
-    "dedup_minhash_lsh",  # MinHash band key + verify moved to dedup helpers
-    "dedup_minhash_cjk",  # MinHash band key + verify moved to dedup helpers
-    "dedup_minhash_xxh",  # shared xxhash64 signature aggregation
-    "minhash_xxh_pairset",  # dual-engine path on the shared helpers
-    "dedup_ngram_jaccard",  # LSH candidates come from minhash_lsh_pairs
-    "fuzzy_decontamination",  # shared MinHash band key
+    "dedup_minhash_lsh",  # md5 signature + verify sets from the one MinHash kernel
+    "dedup_minhash_cjk",  # script-tokenized signature + verify sets from the kernel
+    "minhash_xxh_pairset",  # dual engine: pre-shingled signature + verify sets
+    "dedup_ngram_jaccard",  # LSH candidates: signature + verify sets from the kernel
+    "dedup_ngram_dfcut",  # inverted-index sets from the kernel, dedupe="string"
+    "dedup_ngram_sampled",  # inverted-index sets from the kernel, dedupe="string"
+    "neardup_time_horizon",  # fused sig+hs kernel output, shared band key and score
+    "neardup_estimate",  # signature kernel output, shared band key and score
 ]
 
 

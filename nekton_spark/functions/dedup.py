@@ -67,9 +67,10 @@ def band_key(b: int, r: int, hash: str) -> Column:
     """LSH bucket key of band ``b``: the hash of the ``sig`` column's
     ``r``-long slice, salted by the band index. The one band key of
     every banded-MinHash join (:func:`minhash_lsh_pairs`, its dual
-    twin, decontaminate.fuzzy_contamination_pairs). The md5 form is
-    what the DuckDB oracles replay; xxhash64 needs no oracle parity and
-    keeps the production path JVM-native (one xxhash64 per band)."""
+    twin, decontaminate.fuzzy_contamination_pairs, the streaming
+    near-dup). The md5 form is what the DuckDB oracles replay;
+    xxhash64 needs no oracle parity and keeps the production path
+    JVM-native (one xxhash64 per band)."""
     sl = F.concat_ws(",", F.slice("sig", b * r + 1, r))
     if hash == "xxhash64":
         return F.xxhash64(sl, F.lit(b))
@@ -150,174 +151,84 @@ def _md5_h60_batch(sh_lists: list[list[str]]) -> dict[str, int]:
     return memo
 
 
-def _hashed_shingles_udf(
-    shingle_n: int, tokenize: str = "word", dedupe: str = "hash"
+def _minhash_udf(
+    out: str,
+    k: int = DEFAULT_K,
+    shingle_n: int | None = None,
+    tokenize: str = "word",
+    dedupe: str = "hash",
 ):
-    """Distinct hash60(seed 0) shingle set per doc, Arrow-batched — the
-    md5-engine verify-stage kernel (r15 opt, second pass). The JVM
-    ``array_distinct(transform(shingles, hash60))`` expression it
-    replaces computes an md5 + string concat per gram OCCURRENCE inside
-    an interpreted HOF lambda (HOFs never codegen); this kernel hashes
-    each DISTINCT shingle once per Arrow batch (:func:`_md5_h60_batch`
-    — clique members share their whole shingle set and sit in the same
-    batch, so a c-doc clique pays 1× the md5 work, not c×). Measured
-    2× faster warm on the cjk verify pin at sf0.1 with the set output
-    proven identical element-for-element (test_hashed_shingles_udf
-    pins the JVM-expression parity over the NULL/empty/whitespace/CJK
-    edge battery). Set semantics match the JVM expression: empty/NULL
-    text → []; element order differs (first-occurrence-of-hash vs
-    first-occurrence-of-gram) but only |∩|/|∪| sizes are consumed.
-    Runs post-semi-join on candidates only — O(candidate docs) at
-    scale, the narrow (id, longs) crossing — distinct from the r15
-    REVERTED fused sig+hs experiment, which carried hs arrays through
-    the banding shuffle.
+    """The one Arrow-batched MinHash kernel: per doc, the k-long
+    signature and/or the distinct hash60(seed 0) shingle set.
 
-    ``dedupe`` names the distinct key, matching the JVM construction
-    each call site replaces bit-for-bit INCLUDING the ~2⁻⁶⁰ collision
-    edge: ``"hash"`` ≙ ``array_distinct(transform(sh, hash60))``
-    (minhash verify — a collision dedupes), ``"string"`` ≙
+    ``shingle_n`` given means a text column, shingled by
+    :func:`_shingles_py`; ``shingle_n=None`` means a pre-shingled
+    ``array<string>`` column (the pinned :func:`_shingles_expr` output
+    of the dual-engine plan). Each DISTINCT shingle in the batch is
+    md5-hashed once (:func:`_md5_h60_batch`), and the affine family is
+    one numpy broadcast ``(A*h0 + B) & mask`` with an axis-min instead
+    of ~k×|shingles| interpreted JVM lambda steps (measured ~1 ms/doc
+    → ~30 µs/doc).
+
+    ``out`` is ``"sig"`` (NULL for a doc without shingles), ``"hs"``
+    (``[]`` without shingles) or ``"sig,hs"`` (one struct from one
+    pass, for the near-dup paths that carry the set through a join).
+
+    ``dedupe`` names the distinct key of ``hs``, matching the JVM
+    construction each call site replaces bit-for-bit INCLUDING the
+    ~2⁻⁶⁰ collision edge: ``"hash"`` ≙ ``array_distinct(transform(sh,
+    hash60))`` (minhash verify — a collision dedupes), ``"string"`` ≙
     ``transform(array_distinct(sh), hash60)`` (inverted-index plan and
-    its DuckDB oracle — a collision keeps both rows)."""
+    its DuckDB oracle — a collision keeps both rows). The signature is
+    the same under either key. ``test_minhash_udf_matches_jvm_expr``
+    pins every input/output shape against the JVM expressions."""
+    if out not in ("sig", "hs", "sig,hs"):
+        raise ValueError(f"unknown minhash output: {out!r} (sig|hs|sig,hs)")
     if dedupe not in ("hash", "string"):
         raise ValueError(f"unknown dedupe key: {dedupe!r}")
     by_string = dedupe == "string"
+    a_c, b_c = affine_consts(k)
+    A = np.array(a_c, dtype=np.int64)[:, None]
+    B = np.array(b_c, dtype=np.int64)[:, None]
 
-    @F.pandas_udf("array<long>")
-    def _hs(texts: pd.Series) -> pd.Series:
-        sh_lists = [_shingles_py(t or "", shingle_n, tokenize) for t in texts]
-        memo = _md5_h60_batch(sh_lists)
-        if by_string:
-            out = [
-                [memo[s] for s in dict.fromkeys(sh)] if sh else []
-                for sh in sh_lists
-            ]
+    def sig_of(hs: list[int]) -> list[int] | None:
+        if not hs:
+            return None
+        h0 = np.fromiter(hs, dtype=np.int64, count=len(hs)) % H0_MOD
+        return ((A * h0[None, :] + B) & REHASH_MASK).min(axis=1).tolist()
+
+    def columns(col: pd.Series) -> dict[str, list]:
+        if shingle_n is None:
+            sh_lists = [list(s) if s is not None else [] for s in col]
         else:
-            out = [
-                list(dict.fromkeys(memo[s] for s in sh)) if sh else []
-                for sh in sh_lists
-            ]
-        return pd.Series(out)
-
-    return _hs
-
-
-def _minhash_sig_from_sh_udf(k: int):
-    """Signature kernel over a PRE-SHINGLED column (r16, r15 verdict
-    #3 — the shared-shingle dual-engine plan): identical body to
-    :func:`_minhash_sig_udf` except the shingle lists arrive as an
-    ``array<string>`` column (the pinned JVM ``_shingles_expr`` output)
-    instead of being recomputed from text in Python. Bit-identical
-    output given equal shingle lists — which the
-    ``test_hashed_shingles_udf`` battery pins for both tokenizers."""
-    a_c, b_c = affine_consts(k)
-    A = np.array(a_c, dtype=np.int64)[:, None]
-    B = np.array(b_c, dtype=np.int64)[:, None]
-
-    @F.pandas_udf("array<long>")
-    def _sig(shs: pd.Series) -> pd.Series:
-        sh_lists = [list(s) if s is not None else [] for s in shs]
+            sh_lists = [_shingles_py(t or "", shingle_n, tokenize) for t in col]
         memo = _md5_h60_batch(sh_lists)
-        out = []
-        for sh in sh_lists:
-            if not sh:
-                out.append(None)
-                continue
-            hs = dict.fromkeys(memo[s] for s in sh)
-            h0 = np.fromiter(hs, dtype=np.int64, count=len(hs)) % H0_MOD
-            out.append(((A * h0[None, :] + B) & REHASH_MASK).min(axis=1).tolist())
-        return pd.Series(out)
+        hs_col = [
+            [memo[s] for s in dict.fromkeys(sh)]
+            if by_string
+            else list(dict.fromkeys(memo[s] for s in sh))
+            for sh in sh_lists
+        ]
+        # column lists, not per-row dicts: building the return frame
+        # row-dict-wise made pandas re-infer each row and dominated the
+        # batch at 10× corpus scale (r16)
+        if out == "hs":
+            return {"hs": hs_col}
+        return {"sig": [sig_of(hs) for hs in hs_col], "hs": hs_col}
 
-    return _sig
+    if out == "sig,hs":
 
+        @F.pandas_udf("sig array<long>, hs array<long>")
+        def _minhash(col: pd.Series) -> pd.DataFrame:
+            return pd.DataFrame(columns(col), columns=["sig", "hs"])
 
-def _hashed_from_sh_udf():
-    """Distinct hash60(seed 0) set from a pre-shingled column — the
-    verify-set kernel of the dual-engine plan; same dedupe-by-hash
-    semantics as ``_hashed_shingles_udf(dedupe="hash")``."""
+    else:
 
-    @F.pandas_udf("array<long>")
-    def _hs(shs: pd.Series) -> pd.Series:
-        sh_lists = [list(s) if s is not None else [] for s in shs]
-        memo = _md5_h60_batch(sh_lists)
-        return pd.Series(
-            [
-                list(dict.fromkeys(memo[s] for s in sh)) if sh else []
-                for sh in sh_lists
-            ]
-        )
+        @F.pandas_udf("array<long>")
+        def _minhash(col: pd.Series) -> pd.Series:
+            return pd.Series(columns(col)[out])
 
-    return _hs
-
-
-def _sig_and_hashed_shingles_udf(k: int, shingle_n: int, tokenize: str = "word"):
-    """One Arrow pass producing BOTH the k-long MinHash signature and
-    the doc's distinct hashed shingle set (full 60-bit hash60 — no
-    H0_MOD fold, minimizing collision odds): the md5 per shingle is
-    computed once per DISTINCT shingle per batch (see
-    :func:`_md5_h60_batch`) and feeds both outputs. Used by the
-    exact-verify near-dup paths that carry the shingle set through a
-    join — hashed 8-byte elements instead of shingle strings is ~10×
-    narrower join state, and deriving them here avoids both a second
-    Arrow pass and ~|corpus|×|shingles| JVM md5 calls a post-hoc
-    transform would cost (measured r8: the transform variant was +40%
-    wall at sf10)."""
-    a_c, b_c = affine_consts(k)
-    A = np.array(a_c, dtype=np.int64)[:, None]
-    B = np.array(b_c, dtype=np.int64)[:, None]
-
-    @F.pandas_udf("sig array<long>, hs array<long>")
-    def _both(texts: pd.Series) -> pd.DataFrame:
-        sh_lists = [_shingles_py(t or "", shingle_n, tokenize) for t in texts]
-        memo = _md5_h60_batch(sh_lists)
-        # two column lists, not a list of per-row dicts: building the
-        # return frame row-dict-wise made pandas re-infer each row and
-        # dominated the batch at 10× corpus scale (r16)
-        sig_col: list = []
-        hs_col: list = []
-        for sh in sh_lists:
-            if not sh:
-                sig_col.append(None)
-                hs_col.append(None)
-                continue
-            # dedupe on the HASH VALUE (not the shingle) to keep the
-            # legacy first-occurrence order even under a 2^-60 collision
-            hs = list(dict.fromkeys(memo[s] for s in sh))
-            h0 = np.fromiter(hs, dtype=np.int64, count=len(hs)) % H0_MOD
-            sig_col.append(((A * h0[None, :] + B) & REHASH_MASK).min(axis=1).tolist())
-            hs_col.append(hs)
-        return pd.DataFrame({"sig": sig_col, "hs": hs_col})
-
-    return _both
-
-
-def _minhash_sig_udf(k: int, shingle_n: int, tokenize: str = "word"):
-    """Arrow-batched signature computation. hashlib md5 produces the
-    identical base hash to the JVM/DuckDB expression; the affine family
-    is evaluated as one numpy broadcast (A[:,None]*h0 + B[:,None]) & mask
-    with an axis-min — replacing ~k×|shingles| interpreted HOF lambda
-    steps per document (measured ~1 ms/doc → ~30 µs/doc). Each DISTINCT
-    shingle in the batch is hashed once (:func:`_md5_h60_batch` — the
-    signature min is unchanged by duplicate shingles, within a doc or
-    across clique members)."""
-    a_c, b_c = affine_consts(k)
-    A = np.array(a_c, dtype=np.int64)[:, None]
-    B = np.array(b_c, dtype=np.int64)[:, None]
-
-    @F.pandas_udf("array<long>")
-    def _sig(texts: pd.Series) -> pd.Series:
-        sh_lists = [_shingles_py(t or "", shingle_n, tokenize) for t in texts]
-        memo = _md5_h60_batch(sh_lists)
-        out = []
-        for sh in sh_lists:
-            if not sh:
-                out.append(None)
-                continue
-            hs = dict.fromkeys(memo[s] for s in sh)
-            h0 = np.fromiter(hs, dtype=np.int64, count=len(hs)) % H0_MOD
-            out.append(((A * h0[None, :] + B) & REHASH_MASK).min(axis=1).tolist())
-        return pd.Series(out)
-
-    return _sig
+    return _minhash
 
 
 def _shingles_expr(
@@ -456,7 +367,7 @@ def minhash_signatures(
 
     ``hash`` picks the base-hash engine:
 
-    - ``"md5"`` — Arrow-batched pandas UDF (see _minhash_sig_udf):
+    - ``"md5"`` — Arrow-batched pandas UDF (see :func:`_minhash_udf`):
       bit-identical to the DuckDB oracle, used wherever hash-match
       verification runs.
     - ``"xxhash64"`` — pure JVM explode + codegen'd min-aggregation
@@ -477,7 +388,7 @@ def minhash_signatures(
         return _minhash_sigs_jvm(df, text_col, id_col, k, shingle_n, tokenize)
     if hash != "md5":
         raise ValueError(f"unknown hash engine: {hash!r}")
-    sig = _minhash_sig_udf(k, shingle_n, tokenize)(F.col(text_col))
+    sig = _minhash_udf("sig", k, shingle_n, tokenize)(F.col(text_col))
     return (
         df.select(F.col(id_col).alias("id"), sig.alias("sig"))
         .filter(F.col("sig").isNotNull())
@@ -592,8 +503,10 @@ def minhash_lsh_pairs(
     else:
         # md5 engine: Arrow batch kernel — hash60 per DISTINCT shingle
         # per batch instead of an interpreted md5 per gram occurrence
-        # (see _hashed_shingles_udf; identical sets, 2× faster warm)
-        sh_col = _hashed_shingles_udf(shingle_n, tokenize)(F.col("_txt"))
+        # (see _minhash_udf; identical sets, 2× faster warm)
+        sh_col = _minhash_udf("hs", shingle_n=shingle_n, tokenize=tokenize)(
+            F.col("_txt")
+        )
     sh = (
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("_txt"))
         .join(cand_ids, "id", "left_semi")
@@ -614,15 +527,15 @@ def _verify_jaccard(
     return (
         cand.join(a, F.col("id_a") == F.col("a.id"))
         .join(b, F.col("id_b") == F.col("b.id"))
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("a.sh", "b.sh")).cast("double")
-                / F.size(F.array_union("a.sh", "b.sh"))
-            ).alias("jaccard"),
-        )
+        .select("id_a", "id_b", set_jaccard("a.sh", "b.sh").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def set_jaccard(sh_a: Column | str, sh_b: Column | str) -> Column:
+    """Exact Jaccard ``|∩|/|∪|`` of two hashed-shingle set columns."""
+    return F.size(F.array_intersect(sh_a, sh_b)).cast("double") / F.size(
+        F.array_union(sh_a, sh_b)
     )
 
 
@@ -643,9 +556,9 @@ def minhash_lsh_pairs_dual(
 
     One pinned ``(id, shingles)`` frame feeds all four consumers:
 
-    - md5 signatures: Arrow kernel over the shingle arrays
-      (:func:`_minhash_sig_from_sh_udf` — same body as the from-text
-      kernel, minus the Python re-shingling);
+    - md5 signatures: :func:`_minhash_udf` over the shingle arrays
+      (``shingle_n=None`` — the from-text kernel minus the Python
+      re-shingling);
     - xxhash64 signatures: explode the pinned shingles → the
       :func:`_affine_min_sigs` aggregation :func:`_minhash_sigs_jvm`
       uses (its shingle expression is exactly what the pin holds);
@@ -659,7 +572,7 @@ def minhash_lsh_pairs_dual(
     ``test_minhash_dual_matches_independent_chains``): signatures
     depend only on the shingle SET, both paths build their band keys
     with :func:`band_key` and verify with :func:`_verify_jaccard`, and
-    the JVM-vs-Python shingle parity is the ``test_hashed_shingles_udf``
+    the JVM-vs-Python shingle parity is the ``test_minhash_udf``
     battery's standing pin.
 
     Scale shape: the shingle pin is ~(shingle_n ×) corpus text — the
@@ -686,7 +599,7 @@ def minhash_lsh_pairs_dual(
     sig_md5 = shf.select(
         F.lit(1).alias("eng"),
         "id",
-        _minhash_sig_from_sh_udf(k)(F.col("sh")).alias("sig"),
+        _minhash_udf("sig", k)(F.col("sh")).alias("sig"),
     ).filter(F.col("sig").isNotNull())
     sig_xxh = _affine_min_sigs(
         shf.select("id", F.explode("sh").alias("s")), k, F.lit(0).alias("eng")
@@ -730,7 +643,7 @@ def minhash_lsh_pairs_dual(
         shf.join(ids, "id", "left_semi")
         .select(
             "id",
-            _hashed_from_sh_udf()(F.col("sh")).alias("hs_md5"),
+            _minhash_udf("hs")(F.col("sh")).alias("hs_md5"),
             F.array_distinct(
                 F.transform("sh", lambda g: F.xxhash64(g))
             ).alias("hs_xxh"),
@@ -954,13 +867,13 @@ def ngram_jaccard_pairs(
     # (quadratic) pair-join compares longs. Collisions are ~2^-60 and
     # the oracle hashes identically, so results are unchanged. The
     # hashing happens INSIDE the Arrow shingle pass (r15 opt, second
-    # wave: _hashed_shingles_udf dedupe="string" — hash60 per DISTINCT
+    # wave: _minhash_udf dedupe="string" — hash60 per DISTINCT
     # shingle per batch): the old construction shipped the string
     # arrays through Arrow only to feed an interpreted JVM
     # transform(hash60) (an md5 + string concat per element — HOF
     # lambdas never codegen). dedupe="string" keeps the oracle's exact
     # list_distinct(strings)-then-hash semantics.
-    hashed_set = _hashed_shingles_udf(n, tokenize, dedupe="string")
+    hashed_set = _minhash_udf("hs", shingle_n=n, tokenize=tokenize, dedupe="string")
     # fan out BELOW the shingle UDF: a small corpus reads as one parquet
     # split and the corpus-wide Arrow shingle pass is the heavy stage —
     # it must run fanned, not single-task (r15 opt; no-op at real scale)

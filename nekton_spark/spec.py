@@ -54,9 +54,9 @@ class Spec:
     #   commits (r14 adjudication, BASELINE.md: 5.6 s → 2.3 s on the
     #   sf0.1 dedup leg by 32 → 8, data constant). Size it to expected
     #   keys/batch; leave unset at real corpus scale. The ambient
-    #   session value is restored when the spec finishes (batch: at
-    #   return; streaming: asynchronously at query termination via a
-    #   self-removing listener — r16).
+    #   session value is restored when run_spec returns: a started
+    #   stream planned its batches on a session cloned at start(), so
+    #   it keeps the count it started with.
     engine: dict = None  # type: ignore[assignment]
 
     @classmethod
@@ -114,65 +114,9 @@ def run_spec(spark: SparkSession, spec: Spec | str):
             raise ValueError(f"state_partitions must be >= 1, got {sp}")
         prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    _, run_sink = compile_spec(spark, spec)
-    result = run_sink()
-    if prior_shuffle is not None:
-        if result is None:
-            # batch sink: the job is done, hand the session back with
-            # its prior partition count (r15, ADVICE: later specs /
-            # queries were silently inheriting this spec's small N)
+    try:
+        _, run_sink = compile_spec(spark, spec)
+        return run_sink()
+    finally:
+        if prior_shuffle is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
-        else:
-            # streaming sink (r16, r15 verdict #8): the conf must stay
-            # set while the stream runs — the stateful query locks the
-            # count into its checkpoint at first-batch planning, and
-            # restoring mid-run would race that — but it must NOT leak
-            # to the session after the stream stops. A termination
-            # listener scoped to this query id restores the ambient
-            # value once the stream ends (the restore is asynchronous:
-            # it lands on the listener-bus thread shortly after
-            # ``stop()`` returns).
-            _restore_shuffle_on_termination(spark, result, prior_shuffle)
-    return result
-
-
-def _restore_shuffle_on_termination(spark, query, prior_shuffle: str) -> None:
-    """Restore ``spark.sql.shuffle.partitions`` when ``query`` ends.
-
-    Registered per ``run_spec`` streaming invocation; self-removing.
-    Concurrent streaming specs restore in termination order (each
-    captured its own ambient value at start — the same semantics the
-    raw conf set/restore always had). A query that already ended when
-    the listener is registered (a stream that died at startup) may
-    never deliver its termination event, so it is restored at once."""
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    qid = str(query.id)
-
-    class _Restore(StreamingQueryListener):
-        def onQueryStarted(self, event):  # pragma: no cover - unused
-            pass
-
-        def onQueryProgress(self, event):  # pragma: no cover - unused
-            pass
-
-        def onQueryIdle(self, event):  # pragma: no cover - unused
-            pass
-
-        def onQueryTerminated(self, event):
-            if str(event.id) == qid:
-                self.restore()
-
-        def restore(self):
-            try:
-                spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
-            finally:
-                try:
-                    spark.streams.removeListener(self)
-                except Exception:
-                    pass
-
-    listener = _Restore()
-    spark.streams.addListener(listener)
-    if not query.isActive:
-        listener.restore()

@@ -30,7 +30,7 @@ branches agree. The batch-equivalence test checks this against
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..materialize import materialize
@@ -38,12 +38,25 @@ from ..materialize import materialize
 from ..functions.dedup import (
     DEFAULT_BANDS,
     DEFAULT_K,
-    _minhash_sig_udf,
-    _sig_and_hashed_shingles_udf,
+    _minhash_udf,
+    band_key,
+    band_rows,
+    set_jaccard,
 )
-from ..functions.hashing import hash60
 
 __all__ = ["streaming_minhash_near_dup"]
+
+
+def _estimate(sig_a: Column, sig_b: Column, k: int) -> Column:
+    """MinHash estimator: the share of agreeing signature components."""
+    return (
+        F.aggregate(
+            F.zip_with(sig_a, sig_b, lambda a, b: F.when(a == b, 1).otherwise(0)),
+            F.lit(0),
+            lambda acc, x: acc + x,
+        ).cast("double")
+        / k
+    )
 
 
 def streaming_minhash_near_dup(
@@ -86,8 +99,6 @@ def streaming_minhash_near_dup(
     """
     if verify not in ("exact", "estimate"):
         raise ValueError(f"unknown verify mode: {verify!r} (exact|estimate)")
-    from nekton_spark.functions.dedup import band_rows
-
     # validated like the batch sibling: bands > k would give r=0 —
     # every band key the hash of an EMPTY slice, i.e. one bucket and a
     # corpus-wide stream-stream cross join
@@ -106,7 +117,7 @@ def streaming_minhash_near_dup(
         # one Arrow pass yields the signature AND the dictionary-
         # encoded (60-bit hashed) shingle set — 8 bytes/shingle of
         # join state instead of the shingle string
-        both = _sig_and_hashed_shingles_udf(k, shingle_n)
+        both = _minhash_udf("sig,hs", k, shingle_n)
         base = (
             df.select(
                 F.col(id_col).alias("id"),
@@ -117,18 +128,13 @@ def streaming_minhash_near_dup(
             .filter(F.col("sig").isNotNull())
         )
     else:
-        sig_udf = _minhash_sig_udf(k, shingle_n)
+        sig_udf = _minhash_udf("sig", k, shingle_n)
         base = df.select(
             F.col(id_col).alias("id"),
             F.col(ts_col).alias("ts"),
             sig_udf(F.col(text_col)).alias("sig"),
         ).filter(F.col("sig").isNotNull())
-    band_array = F.array(
-        *[
-            hash60(F.concat_ws(",", F.slice("sig", b * r + 1, r)), 1000 + b)
-            for b in range(bands)
-        ]
-    )
+    band_array = F.array(*[band_key(b, r, "md5") for b in range(bands)])
     if df.isStreaming:
         from .windows import ensure_event_time
 
@@ -161,24 +167,9 @@ def streaming_minhash_near_dup(
             1,
         )
         if verify == "exact":
-            inter = F.size(
-                F.array_intersect(F.col("l.sh"), F.col("r.sh"))
-            ).cast("double")
-            union = F.size(F.array_union(F.col("l.sh"), F.col("r.sh")))
-            score = inter / union
+            score = set_jaccard(F.col("l.sh"), F.col("r.sh"))
         else:
-            score = (
-                F.aggregate(
-                    F.zip_with(
-                        F.col("l.sig"),
-                        F.col("r.sig"),
-                        lambda a, b: F.when(a == b, 1).otherwise(0),
-                    ),
-                    F.lit(0),
-                    lambda acc, x: acc + x,
-                ).cast("double")
-                / k
-            )
+            score = _estimate(F.col("l.sig"), F.col("r.sig"), k)
         return (
             joined.filter(F.col("l.band") == first_shared)
             .select(
@@ -258,10 +249,7 @@ def streaming_minhash_near_dup(
         .distinct()
     )
     if verify == "exact":
-        score = (
-            F.size(F.array_intersect(F.col("_sha"), F.col("_shb"))).cast("double")
-            / F.size(F.array_union(F.col("_sha"), F.col("_shb")))
-        )
+        score = set_jaccard(F.col("_sha"), F.col("_shb"))
         # sig rides along for the exact-band-slice equivalence filter
         # below (k longs per fetched pair side — pair-scale, not in
         # the hot banded shuffle)
@@ -276,18 +264,7 @@ def streaming_minhash_near_dup(
             F.col("sig").alias("_sigb"),
         )
     else:
-        score = (
-            F.aggregate(
-                F.zip_with(
-                    F.col("_siga"),
-                    F.col("_sigb"),
-                    lambda a, b: F.when(a == b, 1).otherwise(0),
-                ),
-                F.lit(0),
-                lambda acc, x: acc + x,
-            ).cast("double")
-            / k
-        )
+        score = _estimate(F.col("_siga"), F.col("_sigb"), k)
         st_a = base.select(F.col("id").alias("_ida"), F.col("sig").alias("_siga"))
         st_b = base.select(F.col("id").alias("_idb"), F.col("sig").alias("_sigb"))
     # Candidates were admitted on the 60-bit band HASH alone (the

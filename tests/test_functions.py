@@ -271,22 +271,29 @@ class TestDedup:
         assert script_spread_py("") == ""
         assert script_spread_py("plain ascii text") == "plain ascii text"
 
-    def test_hashed_shingles_udf_matches_jvm_expr(self, spark):
-        """r15 opt (verify-stage kernel swap): the Arrow batch kernel
-        `_hashed_shingles_udf` must produce the SAME hashed-shingle SET
-        as the JVM `array_distinct(transform(shingles, hash60))`
-        expression it replaces on the md5 engine — over the
-        NULL/empty/whitespace-edged battery, CJK under both tokenize
-        policies, and a shared-shingle clique (the batch-memo path).
-        Element order may differ (first-occurrence-of-hash vs of-gram);
-        the verify stage consumes only |∩|/|∪| sizes, so the pin is
-        sorted-set equality."""
+    def test_minhash_udf_matches_jvm_expr(self, spark):
+        """The one Arrow MinHash kernel `_minhash_udf` against the JVM
+        expressions it replaces, over the NULL/empty/whitespace-edged
+        battery, CJK under both tokenize policies, and a shared-shingle
+        clique (the batch-memo path):
+
+        - ``hs`` is the SAME hashed-shingle SET as the JVM
+          ``array_distinct(transform(shingles, hash60))`` (element
+          order may differ; the verify stage consumes only |∩|/|∪|
+          sizes, so the pin is sorted-set equality), and
+          ``dedupe="string"`` is ORDER-equal to
+          ``transform(array_distinct(shingles), hash60)``;
+        - pre-shingled input (``shingle_n=None`` over the
+          ``_shingles_expr`` arrays) gives the same ``hs`` and ``sig``
+          as text input;
+        - the ``"sig,hs"`` struct fields equal the single-output
+          results; a doc without shingles gives ``sig`` NULL and
+          ``hs`` [];
+        - an unknown ``out`` refuses."""
+        import pytest as _pt
         from pyspark.sql import functions as F
 
-        from nekton_spark.functions.dedup import (
-            _hashed_shingles_udf,
-            _shingles_expr,
-        )
+        from nekton_spark.functions.dedup import _minhash_udf, _shingles_expr
         from nekton_spark.functions.hashing import hash60
 
         rows = [
@@ -304,21 +311,19 @@ class TestDedup:
         ]
         d = spark.createDataFrame(rows, "doc_id long, text string")
         for tok in ("word", "script"):
+            shingles = _shingles_expr(F.col("text"), 3, tok)
             jvm = d.select(
                 "doc_id",
                 F.array_sort(
                     F.array_distinct(
-                        F.transform(
-                            _shingles_expr(F.col("text"), 3, tok),
-                            lambda g: hash60(g, 0),
-                        )
+                        F.transform(shingles, lambda g: hash60(g, 0))
                     )
                 ).alias("sh"),
             )
             arrow = d.select(
                 "doc_id",
                 F.array_sort(
-                    _hashed_shingles_udf(3, tok)(F.col("text"))
+                    _minhash_udf("hs", shingle_n=3, tokenize=tok)(F.col("text"))
                 ).alias("sh"),
             )
             got = {r.doc_id: r.sh for r in arrow.collect()}
@@ -332,19 +337,46 @@ class TestDedup:
             jvm_s = d.select(
                 "doc_id",
                 F.transform(
-                    F.array_distinct(_shingles_expr(F.col("text"), 3, tok)),
-                    lambda g: hash60(g, 0),
+                    F.array_distinct(shingles), lambda g: hash60(g, 0)
                 ).alias("sh"),
             )
             arrow_s = d.select(
                 "doc_id",
-                _hashed_shingles_udf(3, tok, dedupe="string")(
+                _minhash_udf("hs", shingle_n=3, tokenize=tok, dedupe="string")(
                     F.col("text")
                 ).alias("sh"),
             )
             got_s = {r.doc_id: r.sh for r in arrow_s.collect()}
             want_s = {r.doc_id: r.sh for r in jvm_s.collect()}
             assert got_s == want_s, tok  # ORDER-sensitive equality
+
+            # one row per doc: text-input and pre-shingled-input
+            # outputs, and the struct from one pass
+            k = d.select(
+                "doc_id",
+                _minhash_udf("hs", shingle_n=3, tokenize=tok)(F.col("text")).alias("hs_t"),
+                _minhash_udf("sig", shingle_n=3, tokenize=tok)(F.col("text")).alias("sig_t"),
+                _minhash_udf("hs")(shingles).alias("hs_p"),
+                _minhash_udf("sig")(shingles).alias("sig_p"),
+                _minhash_udf("sig,hs", shingle_n=3, tokenize=tok)(F.col("text")).alias("both_t"),
+                _minhash_udf("sig,hs")(shingles).alias("both_p"),
+                _minhash_udf("sig,hs", shingle_n=3, tokenize=tok, dedupe="string")(
+                    F.col("text")
+                ).alias("both_s"),
+            ).collect()
+            for r in k:
+                assert r.hs_p == r.hs_t, (tok, r.doc_id)
+                assert r.sig_p == r.sig_t, (tok, r.doc_id)
+                for both in (r.both_t, r.both_p):
+                    assert both.sig == r.sig_t and both.hs == r.hs_t, (tok, r.doc_id)
+                # the signature does not depend on the distinct key
+                assert r.both_s.sig == r.sig_t, (tok, r.doc_id)
+                if got[r.doc_id]:
+                    assert len(r.sig_t) == 16
+                else:
+                    assert r.sig_t is None and r.hs_t == [], (tok, r.doc_id)
+        with _pt.raises(ValueError, match="unknown minhash output"):
+            _minhash_udf("hs,sig")
 
     def test_tokenize_policy_validation(self, spark):
         import pytest as _pt

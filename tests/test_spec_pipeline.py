@@ -430,8 +430,9 @@ output:
         try:
             q = run_spec(spark, spec)
             q.processAllAvailable()
-            # while the stream runs, the knob is in force
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
+            # the running stream keeps its start-time count; the session
+            # reads the ambient value again
+            assert spark.conf.get("spark.sql.shuffle.partitions") == prev
             q.stop()
             out = spark.read.parquet(str(tmp_path / "out"))
             assert out.count() == 50  # 50 distinct fingerprints survive
@@ -474,22 +475,22 @@ output:
         )
         assert spark.conf.get("spark.sql.shuffle.partitions") == prev
 
-    def test_state_partitions_streaming_restored_on_termination(
+    def test_state_partitions_streaming_restored_on_return(
         self, spark, tmp_path
     ):
-        """r16 (r15 verdict #8): the conf stays set for the stream's
-        lifetime (checkpoint-pinned at first-batch planning) but is
-        restored to the ambient value once the query terminates —
-        asynchronously, via the self-removing termination listener —
-        instead of leaking session-wide with a warning (the r15
-        behavior)."""
-        import time
+        """A streaming spec hands the session back with its ambient
+        shuffle-partition count as soon as run_spec returns the running
+        query, while the query itself keeps the count it started with:
+        it plans on a session cloned at start(), and locks that count
+        into its first offset-log entry."""
+        import json
 
         import pyspark.sql.functions as F
 
         from nekton_spark.spec import run_spec
 
         prev = spark.conf.get("spark.sql.shuffle.partitions")
+        assert prev != "2"
         src = tmp_path / "src"
         spark.range(5).select(
             F.col("id").alias("doc_id"),
@@ -520,44 +521,48 @@ output:
 """
         try:
             q = run_spec(spark, spec)
-            q.processAllAvailable()
-            # in force while the stream runs
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "2"
-            q.stop()
-            # restored shortly after termination (listener-bus async)
-            deadline = time.time() + 30
-            while time.time() < deadline:
-                if spark.conf.get("spark.sql.shuffle.partitions") == prev:
-                    break
-                time.sleep(0.1)
             assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+            q.processAllAvailable()
+            q.stop()
+            with open(tmp_path / "ckpt" / "offsets" / "0") as f:
+                meta = json.loads(f.read().splitlines()[1])
+            assert meta["conf"]["spark.sql.shuffle.partitions"] == "2"
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
-    def test_stream_ended_before_listener_restores_at_once(
+    def test_state_partitions_restored_after_compile_error(
         self, spark, tmp_path
     ):
-        """A stream that is already over when the restore listener is
-        registered (one that died at startup) never delivers its
-        termination event to it: the conf is restored and the listener
-        removed right away, not leaked."""
-        from nekton_spark.spec import _restore_shuffle_on_termination
+        """A spec whose compile raises (here: an unknown processor,
+        refused after the conf was set) still hands the session back
+        with its ambient shuffle-partition count."""
+        import pytest as _pt
+
+        from nekton_spark.spec import run_spec
 
         prev = spark.conf.get("spark.sql.shuffle.partitions")
-        jstreams = spark._jsparkSession.streams()
-        n_listeners = len(jstreams.listListeners())
-        q = (
-            spark.readStream.format("rate").load()
-            .writeStream.format("noop")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .start()
-        )
-        q.stop()
+        assert prev != "3"
+        src = tmp_path / "in.txt"
+        src.write_text("alpha\n")
         try:
-            spark.conf.set("spark.sql.shuffle.partitions", "2")
-            _restore_shuffle_on_termination(spark, q, prev)
+            with _pt.raises(ValueError, match="unknown processor type"):
+                run_spec(
+                    spark,
+                    f"""
+engine:
+  state_partitions: 3
+input:
+  type: file
+  path: {src}
+  format: text
+pipeline:
+  processors:
+    - type: no_such_processor
+output:
+  type: stdout
+""",
+                )
             assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-            assert len(jstreams.listListeners()) == n_listeners
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
 
