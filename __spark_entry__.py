@@ -3659,14 +3659,12 @@ def classifier_score_check(spark, sf):
 # the reason. They lead the driver's correctness window; a change that
 # touches an engine path replaces this list with its own rows.
 PRIORITY = [
-    "dedup_minhash_lsh",  # md5 signature + verify sets from the one MinHash kernel
-    "dedup_minhash_cjk",  # script-tokenized signature + verify sets from the kernel
-    "minhash_xxh_pairset",  # dual engine: pre-shingled signature + verify sets
-    "dedup_ngram_jaccard",  # LSH candidates: signature + verify sets from the kernel
-    "dedup_ngram_dfcut",  # inverted-index sets from the kernel, dedupe="string"
-    "dedup_ngram_sampled",  # inverted-index sets from the kernel, dedupe="string"
-    "neardup_time_horizon",  # fused sig+hs kernel output, shared band key and score
-    "neardup_estimate",  # signature kernel output, shared band key and score
+    "ann_index_roundtrip",  # session-resident index handle, fixed codes schema, literal ADC batch
+    "ann_topk_ivfpq",  # probed-cell guard moved from CASE/IN into the literal ADC batch
+    "ann_topk_pq",  # unprobed ADC scan on the literal batch; queries sorted on the driver
+    "ann_topk_pq_rerank",  # pq_topk nominates its re-rank candidates through the new ADC form
+    "ann_topk_ivfpq_residual",  # per-cell coarse term moved from a CASE chain to aligned cterms
+    "ann_topk_ivfpq_residual_k",  # the same residual ADC form under trained k-means cells
 ]
 
 

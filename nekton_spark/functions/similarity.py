@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import math
 import os
+import threading
+from collections import OrderedDict
 
 import numpy as np
 import pandas as pd
@@ -58,35 +60,115 @@ def _sql_double(x: float) -> str:
     return "CAST('Infinity' AS DOUBLE)" if x > 0 else "CAST('-Infinity' AS DOUBLE)"
 
 
-def _adc_chain_sql(luts: list[list[float]]) -> str:
-    """The per-query ADC score chain as ONE SQL fragment — the
-    left-associated sum of per-subspace element_at LUT lookups,
-    structurally identical to the former per-``F.lit`` Column build
-    (same Add/ElementAt/Literal tree after parsing, so values are
-    bit-identical) but costing ONE py4j round-trip per query instead of
-    ~m_sub·(ksub+2): profiling showed the Column construction spent
-    7.9 s of ann_topk_ivfpq_residual's 8.5 s build in 11k JVM gateway
-    calls, and the 200-query recall legs paid ~25k calls (guide §1
-    measure / §5 driver discipline — the driver was the bottleneck,
-    not the cluster)."""
-    terms = [
-        "element_at(array({}),(element_at(codes,{})+1))".format(
-            ",".join(_sql_double(v) for v in lut), s + 1
+def _collect_queries(queries: DataFrame, id_col: str, vec_col: str) -> list:
+    """The bounded query side as driver rows (qid, qv), sorted by qid on
+    the driver: one job, where a Spark ``orderBy`` adds a sampling
+    job."""
+    rows = queries.select(
+        F.col(id_col).alias("qid"), as_double(F.col(vec_col)).alias("qv")
+    ).collect()
+    rows.sort(key=lambda r: r.qid)
+    return rows
+
+
+def _adc_luts(qv: list[float], cbs, m_sub: int, d0: int, ksub: int) -> list[list[float]]:
+    """Per-subspace lookup tables LUT[s][c] = <q_s, codebook[s][c]>,
+    each a 0.0-seeded left fold over the subspace (the oracle's
+    unrolled dot)."""
+    luts = []
+    for s in range(m_sub):
+        lut = []
+        for c in range(ksub):
+            acc = 0.0
+            for j in range(d0):
+                acc += qv[s * d0 + j] * cbs[s][c][j]
+            lut.append(acc)
+        luts.append(lut)
+    return luts
+
+
+def _probe(qv: np.ndarray, c_ids, c_mat, c_norm, n_probe: int) -> list[int]:
+    """Row indexes of the ``n_probe`` coarse cells nearest ``qv`` by
+    exact-fold cosine, ties to the smaller cid (ivf_topk's window
+    order)."""
+    qn = np.sqrt(np.cumsum(qv * qv)[-1])
+    sims = _fold_dots(qv[None, :], c_mat)[0] / (qn * c_norm)
+    return sorted(range(len(c_ids)), key=lambda j: (-sims[j], c_ids[j]))[:n_probe]
+
+
+def _sql_array(items) -> str:
+    return "array(" + ",".join(items) + ")"
+
+
+def _adc_ranked(encoded: DataFrame, qs: list[tuple]) -> DataFrame:
+    """ADC-score ``encoded`` (id, codes[, cid]) against the query batch
+    ``qs`` and rank per query: (query_id, neighbor_id, score, rank),
+    rank by (score desc, neighbor_id asc), the query itself excluded.
+
+    Each element of ``qs`` is ``(qid, luts, cells, cterms)``. ``cells``
+    (probed cids) is None for an unprobed scan; ``cterms`` (the exact
+    coarse term per probed cell, aligned with ``cells``) is None unless
+    residual-encoded.
+
+    The per-query values ride as DATA, not code: ONE literal
+    ``array(named_struct('query_id', q, 'luts', array(<m_sub LUTs>)
+    [, 'cells', array(...)[, 'cterms', array(...)]]))`` is exploded
+    against the codes. Catalyst folds it into a single literal object,
+    so the stage's generated code is the same for every query batch of
+    an index and the codegen cache hits; inline per-query literals
+    (``cid IN (...)``, query ids, LUT arrays inside the chain) forced
+    fresh Janino compiles on every query instead. A row is scored only
+    where ``array_contains(q.cells, cid)``. The score is the
+    left-associated sum of per-subspace LUT lookups ``round``ed to 6
+    digits, ``(ct + chain)`` when residual — the same doubles in the
+    same fold order as the SQL oracle's replay."""
+    if not qs:
+        # no queries → empty result, not an array of zero structs (a
+        # VOID-typed explode that fails the downstream struct
+        # extraction with an unactionable AnalysisException)
+        return encoded.sparkSession.createDataFrame(
+            [], "query_id long, neighbor_id long, score double, rank int"
         )
-        for s, lut in enumerate(luts)
-    ]
-    chain = terms[0]
-    for t in terms[1:]:
-        chain = "(" + chain + "+" + t + ")"
-    return chain
-
-
-def _adc_explode(struct_sqls: list[str]) -> Column:
-    """explode(array(<per-query named_structs>)) parsed in one py4j
-    call. Each element is ``named_struct('query_id', CAST(q AS BIGINT),
-    'score', <score_sql>)`` — the same struct the Column builders
-    produced."""
-    return F.expr("explode(array({}))".format(",".join(struct_sqls)))
+    probed = qs[0][2] is not None
+    residual = qs[0][3] is not None
+    structs = []
+    for qid, luts, cells, cterms in qs:
+        fields = [
+            f"'query_id',{int(qid)}L",
+            "'luts'," + _sql_array(_sql_array(map(_sql_double, lut)) for lut in luts),
+        ]
+        if probed:
+            fields.append("'cells'," + _sql_array(f"{int(c)}L" for c in cells))
+        if residual:
+            fields.append("'cterms'," + _sql_array(map(_sql_double, cterms)))
+        structs.append("named_struct(" + ",".join(fields) + ")")
+    chain = "element_at(element_at(q.luts,1),(element_at(codes,1)+1))"
+    for s in range(2, len(qs[0][1]) + 1):
+        chain = f"({chain}+element_at(element_at(q.luts,{s}),(element_at(codes,{s})+1)))"
+    if residual:
+        chain = (
+            "(element_at(q.cterms,CAST(array_position(q.cells,cid) AS INT))"
+            f"+{chain})"
+        )
+    keep = F.col("q.query_id") != F.col("neighbor_id")
+    if probed:
+        keep = F.expr("array_contains(q.cells,cid)") & keep
+    scored = (
+        encoded.select(
+            F.col("id").alias("neighbor_id"),
+            *(["cid"] if probed else []),
+            "codes",
+            F.expr("explode(" + _sql_array(structs) + ")").alias("q"),
+        )
+        .filter(keep)
+        .select(
+            F.col("q.query_id").alias("query_id"),
+            "neighbor_id",
+            F.expr(f"round({chain},6)").alias("score"),
+        )
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w))
 
 
 def _local_df(spark, rows: list[tuple], ddl: str) -> DataFrame:
@@ -938,46 +1020,13 @@ def pq_topk(
             )
 
     encoded = base.mapInPandas(encode, code_schema)
-
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), as_double(F.col(vec_col)).alias("qv"))
-        .orderBy("qid")
-        .collect()  # queries are the bounded small side by contract
-    )
-    if not q_rows:
-        # see _ivfpq_adc_topk: zero query structs would explode VOID
-        return encoded.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, score double, rank int"
-        )
-
-    def lut_for(qv: list[float], s: int) -> list[float]:
-        out = []
-        for c in range(ksub):
-            acc = 0.0
-            for j in range(d0):  # same left fold as the SQL dot chain
-                acc += qv[s * d0 + j] * cbs[s][c][j]
-            out.append(acc)
-        return out
-
-    structs = []
-    for r in q_rows:
-        luts = [lut_for(list(r.qv), s) for s in range(m_sub)]
-        structs.append(
-            "named_struct('query_id',CAST({} AS BIGINT),'score',round({},6))".format(
-                int(r.qid), _adc_chain_sql(luts)
-            )
-        )
-    scored = (
-        encoded.select(
-            F.col("id").alias("neighbor_id"),
-            _adc_explode(structs).alias("qs"),
-        )
-        .select("qs.query_id", "neighbor_id", "qs.score")
-        .filter(F.col("query_id") != F.col("neighbor_id"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    # queries are the bounded small side by contract
+    qs = [
+        (r.qid, _adc_luts(list(r.qv), cbs, m_sub, d0, ksub), None, None)
+        for r in _collect_queries(queries, id_col, vec_col)
+    ]
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        _adc_ranked(encoded, qs)
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "score", "rank")
     )
@@ -1005,15 +1054,17 @@ def ivfpq_topk(
     quantizer index): the corpus is partitioned into √n inverted lists
     (ivf_topk's deterministic coarse centroids and exact-fold cosine
     argmax) AND stored as m_sub one-byte PQ codes (pq_topk's global
-    codebooks) — queries ADC-scan ONLY the ``n_probe`` probed lists
-    (default 4 — same r10 clustered-recall sweep as ivf_topk: 2->4
-    lifted clustered recall@10 0.37->0.465 at no wall cost).
+    codebooks) — queries ADC-score ONLY rows of the ``n_probe`` probed
+    lists (default 4 — same r10 clustered-recall sweep as ivf_topk:
+    2->4 lifted clustered recall@10 0.37->0.465 at no wall cost).
 
-    This is the scale composition neither parent achieves alone:
+    What the composition buys, and what it does not:
 
-    - vs pq_topk: the compressed scan shrinks from n rows to
-      ~n·n_probe/√n rows (probed lists only) — at 10^10 vectors and
-      n_probe=2 the per-query scan reads ~2·10^5× fewer codes.
+    - vs pq_topk: rows outside the probed lists are never scored, so
+      the LUT work shrinks from n rows to ~n·n_probe/√n rows per query.
+      The scan itself still READS every codes row: the probe is a
+      per-row guard inside the scan, not a partition or row-group
+      prune, so the bytes read per query equal pq_topk's.
     - vs ivf_topk: probed lists are scored from 8-byte codes via
       pure-codegen LUT lookups instead of re-scoring true vectors
       through an Arrow cosine — the 64× memory win rides along.
@@ -1026,8 +1077,8 @@ def ivfpq_topk(
     Probing is driver-side (queries are the bounded small side by
     contract; centroids are already driver-resident): same fold, same
     (sim desc, cid asc) tie order as ivf_topk's window. The per-query
-    probed-cell guard wraps the LUT score in a WHEN, so unprobed rows
-    never evaluate the chain.
+    probed-cell guard filters before the LUT score, so unprobed rows
+    never evaluate the chain (see :func:`_adc_ranked`).
 
     Exactness: the oracle replays coarse centroids + assignment +
     probing (ivf CTEs) and PQ training + encoding + ADC (pq CTEs)
@@ -1060,19 +1111,26 @@ def ivfpq_topk(
     )
 
 
+# The IVF-PQ codes relation (id, cid, codes): the encode passes' output
+# schema AND the schema every ``path/codes`` read is given, so no read
+# of a persisted index runs a schema-inference job.
+IVFPQ_CODES_SCHEMA = T.StructType(
+    [
+        T.StructField("id", T.LongType()),
+        T.StructField("cid", T.LongType()),
+        T.StructField("codes", T.ArrayType(T.IntegerType())),
+    ]
+)
+_CENTROIDS_DDL = "cid long, cv array<double>"
+_CODEBOOKS_DDL = "sub int, code int, c array<double>"
+
+
 def _ivfpq_encode_pass(base, c_ids, c_mat, c_norm, cbs, m_sub, d0):
     """The fused IVF-PQ build pass (extracted from ivfpq_topk, r11, so
     the persisted-index build shares it verbatim): ONE Arrow pass
     computing the coarse cosine-argmax assignment AND the per-subspace
     raw-vector PQ codes — (id, cid, codes), zero shuffles."""
     C = [np.asarray(cb, dtype=np.float64) for cb in cbs]
-    build_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("cid", T.LongType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
 
     def build(batches):
         row_chunk = max(1, (32 << 20) // (8 * max(1, len(c_ids))))
@@ -1104,7 +1162,7 @@ def _ivfpq_encode_pass(base, c_ids, c_mat, c_norm, cbs, m_sub, d0):
                 }
             )
 
-    return base.mapInPandas(build, build_schema)
+    return base.mapInPandas(build, IVFPQ_CODES_SCHEMA)
 
 
 def _ivfpq_adc_topk(
@@ -1114,62 +1172,16 @@ def _ivfpq_adc_topk(
     """The IVF-PQ probe + ADC-scan + top-k stage (extracted from
     ivfpq_topk, r11, so the persisted-index query path shares it
     verbatim): driver-side probing over the resident centroid matrix,
-    per-query LUT chains guarded by the probed-cell WHEN, rank
-    window."""
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), as_double(F.col(vec_col)).alias("qv"))
-        .orderBy("qid")
-        .collect()
-    )
-    if not q_rows:
-        # no queries → empty result, not F.array() of zero structs
-        # (a VOID-typed explode that fails the downstream struct
-        # extraction with an unactionable AnalysisException — r11
-        # review catch)
-        return encoded.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, score double, rank int"
+    then :func:`_adc_ranked` scores the probed cells' rows."""
+    qs = []
+    for r in _collect_queries(queries, id_col, vec_col):
+        qv = list(r.qv)
+        cells = _probe(np.asarray(qv, dtype=np.float64), c_ids, c_mat, c_norm, n_probe)
+        qs.append(
+            (r.qid, _adc_luts(qv, cbs, m_sub, d0, ksub), [c_ids[j] for j in cells], None)
         )
-
-    def lut_for(qv: list[float], s: int) -> list[float]:
-        out = []
-        for c in range(ksub):
-            acc = 0.0
-            for j in range(d0):
-                acc += qv[s * d0 + j] * cbs[s][c][j]
-            out.append(acc)
-        return out
-
-    structs = []
-    for r in q_rows:
-        qv = np.asarray(list(r.qv), dtype=np.float64)
-        qn = np.sqrt(np.cumsum(qv * qv)[-1])
-        dots = _fold_dots(qv[None, :], c_mat)[0]
-        sims = dots / (qn * c_norm)
-        probed = sorted(range(len(c_ids)), key=lambda j: (-sims[j], c_ids[j]))
-        cells = [int(c_ids[j]) for j in probed[:n_probe]]
-        luts = [lut_for(list(r.qv), s) for s in range(m_sub)]
-        # probed-cell guard OUTSIDE the LUT chain: unprobed rows
-        # short-circuit to NULL without evaluating it
-        structs.append(
-            "named_struct('query_id',CAST({} AS BIGINT),'score',"
-            "CASE WHEN (cid IN ({})) THEN round({},6) END)".format(
-                int(r.qid),
-                ",".join(str(c) for c in cells),
-                _adc_chain_sql(luts),
-            )
-        )
-    scored = (
-        encoded.select(
-            F.col("id").alias("neighbor_id"),
-            F.col("cid"),
-            _adc_explode(structs).alias("qs"),
-        )
-        .select("qs.query_id", "neighbor_id", "qs.score")
-        .filter(F.col("score").isNotNull() & (F.col("query_id") != F.col("neighbor_id")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
-        scored.withColumn("rank", F.row_number().over(w))
+        _adc_ranked(encoded, qs)
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "score", "rank")
     )
@@ -1234,15 +1246,93 @@ def _write_index_meta(spark, path: str, meta: dict) -> None:
     ).write.mode("overwrite").parquet(path.rstrip("/") + "/meta")
 
 
+# Session-resident IVF-PQ handles: index path -> (meta listing, (meta,
+# c_ids, c_mat, c_norm, cbs)), least recently used first. Module data
+# (not function attributes), so wrapping the public functions keeps it.
+_HANDLE_PATHS = 4
+_handles: OrderedDict = OrderedDict()
+_handles_lock = threading.Lock()
+
+
+def _meta_listing(spark, path: str):
+    """(name, length, mtime) of every file under ``path/meta``, from one
+    Hadoop ``FileSystem.listStatus`` call — no Spark job. Every build
+    and append rewrites meta under a fresh part-file name, so the
+    listing changes whenever the index does, whichever process wrote
+    it. None when the listing fails (no such directory, or a session
+    without a JVM gateway)."""
+    from py4j.protocol import Py4JError
+
+    try:
+        jp = spark._jvm.org.apache.hadoop.fs.Path(path + "/meta")
+        fs = jp.getFileSystem(spark._jsc.hadoopConfiguration())
+        return tuple(
+            sorted(
+                (s.getPath().getName(), s.getLen(), s.getModificationTime())
+                for s in fs.listStatus(jp)
+            )
+        )
+    except (Py4JError, AttributeError):
+        return None
+
+
+def _handle_get(path: str, listing):
+    """The handle cached for ``path`` under ``listing``, else None."""
+    with _handles_lock:
+        hit = _handles.get(path)
+        if hit is None or hit[0] != listing:
+            return None
+        _handles.move_to_end(path)
+        meta, *arrays = hit[1]
+    return (dict(meta), *arrays)
+
+
+def _handle_put(path: str, listing, handle) -> None:
+    meta, c_ids, c_mat, c_norm, cbs = handle
+    for a in (c_ids, c_mat, c_norm):
+        a.setflags(write=False)
+    frozen = (
+        dict(meta), c_ids, c_mat, c_norm,
+        tuple(tuple(tuple(c) for c in sub) for sub in cbs),
+    )
+    with _handles_lock:
+        _handles[path] = (listing, frozen)
+        _handles.move_to_end(path)
+        while len(_handles) > _HANDLE_PATHS:
+            _handles.popitem(last=False)
+
+
+def _handle_drop(path: str) -> None:
+    with _handles_lock:
+        _handles.pop(path.rstrip("/"), None)
+
+
 def _ivfpq_index_load(spark, path: str):
-    """Load a persisted IVF-PQ index's driver-scale state: the
+    """A persisted IVF-PQ index's driver-scale state (meta, c_ids,
+    c_mat, c_norm, cbs), served from the session-resident handle while
+    the ``path/meta`` listing still matches the one it was loaded
+    under; otherwise read and cached. The arrays are read-only; meta is
+    a fresh dict per call. An unlistable meta is read uncached; so is
+    the format/1 JSON layout, which has no meta relation."""
+    path = path.rstrip("/")
+    listing = _meta_listing(spark, path)
+    if listing is None:
+        return _ivfpq_index_read(spark, path)
+    handle = _handle_get(path, listing)
+    if handle is None:
+        handle = _ivfpq_index_read(spark, path)
+        _handle_put(path, listing, handle)
+    return handle
+
+
+def _ivfpq_index_read(spark, path: str):
+    """Read a persisted IVF-PQ index's driver-scale state: the
     parameters row plus (cid-sorted) centroid matrix and (sub,
     code)-sorted codebooks. Reads format/2 parquet artifacts; falls
     back to the r11 format/1 single-JSON layout when
     ``ivfpq_meta.json`` is present on a driver-readable path. Returns
     (meta, c_ids, c_mat, c_norm, cbs)."""
     import json
-    import os
 
     jmeta = os.path.join(path, "ivfpq_meta.json")
     if "://" not in path and os.path.exists(jmeta):
@@ -1265,13 +1355,13 @@ def _ivfpq_index_load(spark, path: str):
         meta = mrow[0].asDict()
         if meta.get("format") != "nekton_spark.ivfpq/2":
             raise ValueError(f"not an ivfpq index: {path}")
-        cent = spark.read.parquet(path.rstrip("/") + "/centroids").collect()
+        cent = spark.read.schema(_CENTROIDS_DDL).parquet(path + "/centroids").collect()
         cent.sort(key=lambda r: r["cid"])
         c_ids = np.array([r["cid"] for r in cent], dtype=np.int64)
         c_mat = np.asarray(
             [np.asarray(r["cv"], dtype=np.float64) for r in cent]
         )
-        cbr = spark.read.parquet(path.rstrip("/") + "/codebooks").collect()
+        cbr = spark.read.schema(_CODEBOOKS_DDL).parquet(path + "/codebooks").collect()
         cbr.sort(key=lambda r: (r["sub"], r["code"]))
         cbs = [[] for _ in range(meta["m_sub"])]
         for r in cbr:
@@ -1348,7 +1438,7 @@ def ivfpq_index_build(
     _local_df(
         spark,
         [(int(i), [float(x) for x in v]) for i, v in zip(c_ids, c_mat)],
-        "cid long, cv array<double>",
+        _CENTROIDS_DDL,
     ).coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "/centroids")
     _local_df(
         spark,
@@ -1357,7 +1447,7 @@ def ivfpq_index_build(
             for s in range(m_sub)
             for j in range(len(cbs[s]))
         ],
-        "sub int, code int, c array<double>",
+        _CODEBOOKS_DDL,
     ).coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "/codebooks")
     meta = {
         "format": "nekton_spark.ivfpq/2",
@@ -1375,6 +1465,7 @@ def ivfpq_index_build(
         "train_distortion": float(train_distortion),
     }
     _write_index_meta(spark, path, meta)
+    _handle_drop(path)
     return meta | {
         "c_ids": [int(x) for x in c_ids],
         "c_mat": [[float(x) for x in row] for row in c_mat],
@@ -1392,13 +1483,21 @@ def ivfpq_index_query(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Query a persisted IVF-PQ index (see :func:`ivfpq_index_build`):
-    loads the driver-scale meta/centroids/codebooks, scans ONLY the
-    parquet codes relation (never a raw vector), and runs the
-    identical probe + ADC + top-k stage as ivfpq_topk — same rows, no
-    training, no encode pass. Reads format/2 parquet indexes and the
-    legacy r11 format/1 JSON layout."""
+    scans ONLY the parquet codes relation (never a raw vector) and runs
+    the identical probe + ADC + top-k stage as ivfpq_topk — same rows,
+    no training, no encode pass. Reads format/2 parquet indexes and the
+    legacy r11 format/1 JSON layout.
+
+    The driver-scale meta/centroids/codebooks come from a
+    session-resident handle per index path. Before each query, one
+    Hadoop ``listStatus`` of ``path/meta`` (no Spark job) is compared
+    with the listing the handle was loaded under; every build and
+    append rewrites meta under a fresh part-file name, so an index
+    rebuilt or appended to by any process is re-read, never served
+    stale. The codes relation is re-listed on every query, so appended
+    rows are always scanned. The format/1 layout is read uncached."""
     meta, c_ids, c_mat, c_norm, cbs = _ivfpq_index_load(spark, path)
-    encoded = spark.read.parquet(path.rstrip("/") + "/codes")
+    encoded = spark.read.schema(IVFPQ_CODES_SCHEMA).parquet(path.rstrip("/") + "/codes")
     return _ivfpq_adc_topk(
         encoded, queries, c_ids, c_mat, c_norm, cbs,
         meta["m_sub"], meta["d0"], meta["ksub"], n_probe, k,
@@ -1467,7 +1566,7 @@ def ivfpq_index_append(
         )
     codes_path = path.rstrip("/") + "/codes"
     if verify_ids:
-        existing = spark.read.parquet(codes_path).select("id")
+        existing = spark.read.schema(IVFPQ_CODES_SCHEMA).parquet(codes_path).select("id")
         dups = base.select("id").join(existing, "id", "left_semi").count()
         if dups:
             raise ValueError(
@@ -1479,6 +1578,13 @@ def ivfpq_index_append(
     new_meta = dict(meta)
     new_meta["n_rows"] = int(meta["n_rows"]) + int(n_new)
     _write_index_meta(spark, path, new_meta)
+    # the frozen quantizers stay valid: re-key the handle to the new
+    # meta rather than dropping it, so the next query does not reload
+    listing = _meta_listing(spark, path.rstrip("/"))
+    if listing is None:
+        _handle_drop(path)
+    else:
+        _handle_put(path.rstrip("/"), listing, (new_meta, c_ids, c_mat, c_norm, cbs))
     return new_meta
 
 
@@ -1527,10 +1633,10 @@ def ivfpq_residual_topk(
     ivf. ``rerank_mult=None`` gives the pure-ADC variant.
 
     Scoring: the coarse term <q, c(v)> is exact per (query, probed
-    cell) and rides as a literal in a chained CASE on cid; the
-    residual ADC chain is the same pure-codegen LUT fold as the
-    parents. Unprobed rows short-circuit to NULL before evaluating
-    the chain.
+    cell) and rides in the query batch literal beside the probed cells
+    (see :func:`_adc_ranked`); the residual ADC chain is the same
+    pure-codegen LUT fold as the parents. Unprobed rows are filtered
+    before the chain is evaluated.
 
     Build adds ONE bounded Arrow pass over the TRAINING SAMPLE
     (stride-capped at ``train_cap``, materialized once so the m_sub
@@ -1609,14 +1715,6 @@ def ivfpq_residual_topk(
     )
     C = [np.asarray(cb, dtype=np.float64) for cb in cbs]
 
-    build_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("cid", T.LongType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
-
     def build(batches):
         for pdf in batches:
             if len(pdf) == 0:
@@ -1641,72 +1739,25 @@ def ivfpq_residual_topk(
                 }
             )
 
-    encoded = base.mapInPandas(build, build_schema)
+    encoded = base.mapInPandas(build, IVFPQ_CODES_SCHEMA)
 
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), as_double(F.col(vec_col)).alias("qv"))
-        .orderBy("qid")
-        .collect()
-    )
-    if not q_rows:
-        # see _ivfpq_adc_topk: zero query structs would explode VOID
-        return encoded.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, score double, rank int"
-        )
-
-    def lut_for(qv: list[float], s: int) -> list[float]:
-        out = []
-        for c in range(ksub):
-            acc = 0.0
-            for j in range(d0):  # same left fold as the SQL dot chain
-                acc += qv[s * d0 + j] * cbs[s][c][j]
-            out.append(acc)
-        return out
-
-    structs = []
-    for r in q_rows:
-        qv = np.asarray(list(r.qv), dtype=np.float64)
-        qn = np.sqrt(np.cumsum(qv * qv)[-1])
-        dots = _fold_dots(qv[None, :], c_mat)[0]
-        sims = dots / (qn * c_norm)
-        probed = sorted(range(len(c_ids)), key=lambda j: (-sims[j], c_ids[j]))
-        cells = probed[:n_probe]
-        # coarse term <q, c_cid> per probed cell: the same 0.0-seeded
-        # left fold as lut_for, replayed by the oracle's unrolled dot
+    qs = []
+    for r in _collect_queries(queries, id_col, vec_col):
         qlist = list(r.qv)
-        whens = []
+        cells = _probe(np.asarray(qlist, dtype=np.float64), c_ids, c_mat, c_norm, n_probe)
+        # coarse term <q, c_cid> per probed cell: the same 0.0-seeded
+        # left fold as the LUTs, replayed by the oracle's unrolled dot
+        cterms = []
         for j in cells:
             acc = 0.0
             for t in range(dim):
                 acc += qlist[t] * float(c_mat[j][t])
-            whens.append(
-                "WHEN (cid = {}) THEN {}".format(int(c_ids[j]), _sql_double(acc))
-            )
-        cterm = "CASE " + " ".join(whens) + " END"
-        luts = [lut_for(qlist, s) for s in range(m_sub)]
-        # probed-cell guard OUTSIDE the chain: unprobed rows
-        # short-circuit to NULL without evaluating it; score = coarse
-        # term + residual ADC, left-associated (the cterm CASE is
-        # duplicated in guard and sum exactly as the former Column
-        # build duplicated its `cterm` expression tree)
-        chain = _adc_chain_sql(luts)
-        structs.append(
-            "named_struct('query_id',CAST({qid} AS BIGINT),'score',"
-            "CASE WHEN (({ct}) IS NOT NULL) THEN round((({ct})+{ch}),6) "
-            "END)".format(qid=int(r.qid), ct=cterm, ch=chain)
+            cterms.append(acc)
+        qs.append(
+            (r.qid, _adc_luts(qlist, cbs, m_sub, d0, ksub), [c_ids[j] for j in cells], cterms)
         )
-    scored = (
-        encoded.select(
-            F.col("id").alias("neighbor_id"),
-            F.col("cid"),
-            _adc_explode(structs).alias("qs"),
-        )
-        .select("qs.query_id", "neighbor_id", "qs.score")
-        .filter(F.col("score").isNotNull() & (F.col("query_id") != F.col("neighbor_id")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if rerank_mult is None:
+    ranked = _adc_ranked(encoded, qs)
+    if rerank_mult is None or not qs:
         return ranked.filter(F.col("rank") <= k).select(
             "query_id", "neighbor_id", "score", "rank"
         )
@@ -1722,6 +1773,7 @@ def ivfpq_residual_topk(
         F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
     )
     cos = cosine_udf()
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     rescored = (
         cvec.join(F.broadcast(cand), "neighbor_id")
         .join(F.broadcast(qvec), "query_id")

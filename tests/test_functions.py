@@ -1149,6 +1149,181 @@ class TestSimilarity:
         )
         assert out_inc == out_full and len(out_inc) == 9
 
+    @staticmethod
+    def _handle_corpus(spark, seed, n=100):
+        import random
+
+        rng = random.Random(seed)
+        rows = [(i, [rng.gauss(0, 1) for _ in range(64)]) for i in range(n)]
+        return rows, spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def test_ivfpq_index_handle_sees_append(self, spark, tmp_path):
+        """A vector appended after a query (so with a warm handle) is
+        returned by the next query: the append re-keys the handle, and
+        the codes relation is re-listed per query. The rows equal a
+        cold load's."""
+        from nekton_spark.functions import similarity as sim
+
+        rows, df = self._handle_corpus(spark, 59)
+        p = str(tmp_path / "idx")
+        sim.ivfpq_index_build(df, p, coarse="sample", centroid_stride=10)
+        q = df.filter(F.col("vec_id") == 7)
+        before = sim.ivfpq_index_query(spark, p, q, k=3, n_probe=2).collect()
+        assert 500 not in {r["neighbor_id"] for r in before}
+        twin = spark.createDataFrame(
+            [(500, [x * 1.001 for x in rows[7][1]])],
+            "vec_id long, embedding array<double>",
+        )
+        sim.ivfpq_index_append(twin, p, drift_tol=1e9)
+        after = sim.ivfpq_index_query(spark, p, q, k=3, n_probe=2).collect()
+        assert [r["neighbor_id"] for r in after if r["rank"] == 1] == [500]
+        sim._handles.clear()
+        cold = sim.ivfpq_index_query(spark, p, q, k=3, n_probe=2).collect()
+        assert sorted(map(tuple, after)) == sorted(map(tuple, cold))
+
+    def test_ivfpq_index_handle_rebuild_and_copy_over(self, spark, tmp_path):
+        """A rebuild at the same path with another centroid_stride, and
+        an index copied over the path by another writer (copytree), are
+        both served from the new artifacts, never from the warm
+        handle."""
+        import shutil
+
+        from nekton_spark.functions import similarity as sim
+
+        _, df = self._handle_corpus(spark, 61)
+        q = df.filter(F.col("vec_id") < 3)
+        params = dict(coarse="sample", k=3, n_probe=2)
+
+        def query(path):
+            return sorted(map(tuple, sim.ivfpq_index_query(
+                spark, path, q, k=3, n_probe=2).collect()))
+
+        def inline(stride):
+            return sorted(map(tuple, sim.ivfpq_topk(
+                df, q, centroid_stride=stride, **params).collect()))
+
+        p = str(tmp_path / "idx")
+        sim.ivfpq_index_build(df, p, coarse="sample", centroid_stride=10)
+        assert query(p) == inline(10)
+        sim.ivfpq_index_build(df, p, coarse="sample", centroid_stride=7)
+        assert query(p) == inline(7) != inline(10)
+        other = str(tmp_path / "other")
+        sim.ivfpq_index_build(df, other, coarse="sample", centroid_stride=10)
+        shutil.rmtree(p)
+        shutil.copytree(other, p)
+        assert query(p) == inline(10)
+
+    def test_ivfpq_index_refused_append_keeps_rows(self, spark, tmp_path):
+        """A refused append (drift, duplicate ids) leaves the next
+        query's rows unchanged."""
+        from nekton_spark.functions import similarity as sim
+
+        rows, df = self._handle_corpus(spark, 67, n=80)
+        schema = "vec_id long, embedding array<double>"
+        p = str(tmp_path / "idx")
+        sim.ivfpq_index_build(df, p, coarse="sample", centroid_stride=10)
+        q = df.filter(F.col("vec_id") < 3)
+        before = sorted(map(tuple, sim.ivfpq_index_query(spark, p, q, k=3).collect()))
+        drifted = spark.createDataFrame(
+            [(1000 + i, [100.0 * x for x in v]) for i, v in rows[:20]], schema
+        )
+        with pytest.raises(ValueError, match="drift"):
+            sim.ivfpq_index_append(drifted, p)
+        with pytest.raises(ValueError, match="shares 5 id"):
+            sim.ivfpq_index_append(spark.createDataFrame(rows[:5], schema), p, drift_tol=1e9)
+        after = sorted(map(tuple, sim.ivfpq_index_query(spark, p, q, k=3).collect()))
+        assert after == before
+
+    def test_ivfpq_index_warm_query_jobs(self, spark, tmp_path):
+        """A warm query on an unchanged index runs exactly 3 jobs (the
+        query rows' collect, then the ADC scan's shuffle map stage and
+        the ranked result): no job reads meta, centroids or codebooks,
+        none infers the codes schema and none sorts the query rows.
+        With centroids and codebooks moved away, the handle still
+        answers the same rows."""
+        import shutil
+
+        from nekton_spark.functions import similarity as sim
+
+        rows, df = self._handle_corpus(spark, 71)
+        schema = "vec_id long, embedding array<double>"
+        p = str(tmp_path / "idx")
+        sim.ivfpq_index_build(df, p, coarse="sample", centroid_stride=10)
+        q = spark.createDataFrame(rows[:4], schema)
+        first = sim.ivfpq_index_query(spark, p, q, k=3).collect()
+        sc = spark.sparkContext
+        sc.setJobGroup("warm_ivfpq_query", "warm query")
+        try:
+            warm = sim.ivfpq_index_query(spark, p, q, k=3).collect()
+        finally:
+            sc.setJobGroup("", "")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup("warm_ivfpq_query")) == 3
+        for part in ("centroids", "codebooks"):
+            shutil.move(f"{p}/{part}", str(tmp_path / part))
+        moved = sim.ivfpq_index_query(spark, p, q, k=3).collect()
+        assert sorted(map(tuple, warm)) == sorted(map(tuple, first))
+        assert sorted(map(tuple, moved)) == sorted(map(tuple, first))
+
+    def test_ivfpq_index_second_query_no_codegen(self, spark, tmp_path):
+        """The per-query values ride in one folded literal, so a second
+        query op with different query ids (and vectors) compiles no new
+        code: the ADC stage's generated code is the same for every
+        query batch of an index."""
+        from nekton_spark.functions import similarity as sim
+
+        rows, df = self._handle_corpus(spark, 73)
+        schema = "vec_id long, embedding array<double>"
+        p = str(tmp_path / "idx")
+        sim.ivfpq_index_build(df, p, coarse="sample", centroid_stride=10)
+        metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        compiles = metric.METRIC_COMPILATION_TIME()
+        sim.ivfpq_index_query(spark, p, spark.createDataFrame(rows[:8], schema), k=5).collect()
+        before = compiles.getCount()
+        out = sim.ivfpq_index_query(
+            spark, p, spark.createDataFrame(rows[20:28], schema), k=5
+        ).collect()
+        assert compiles.getCount() - before == 0
+        assert len(out) == 40
+
+    def test_ivfpq_handle_cache_threads(self):
+        """The handle cache under concurrent put/get from more threads
+        than cores stays bounded, and a hit is always the handle stored
+        under that path and listing."""
+        import sys
+        import threading
+
+        from nekton_spark.functions import similarity as sim
+
+        errors = []
+
+        def work(t):
+            try:
+                for i in range(300):
+                    key = (f"/idx{(t + i) % 7}", (("part", i % 3, 0),))
+                    handle = ({"key": key}, np.arange(3), np.ones((3, 2)), np.ones(3), [[[0.0]]])
+                    sim._handle_put(*key, handle)
+                    got = sim._handle_get(*key)
+                    if got is not None and got[0]["key"] != key:
+                        errors.append(got[0])
+            except Exception as exc:  # noqa: BLE001 — reported by the assert below
+                errors.append(exc)
+
+        switch = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=work, args=(t,)) for t in range(8)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=60)
+        finally:
+            sys.setswitchinterval(switch)
+        assert not any(th.is_alive() for th in threads)
+        assert errors == []
+        assert len(sim._handles) <= sim._HANDLE_PATHS
+        sim._handles.clear()
+
     def test_ivfpq_index_append_refusals(self, spark, tmp_path):
         """Append refuses (a) a batch whose PQ distortion drifts past
         drift_tol x the build's training distortion — frozen codebooks
