@@ -23,6 +23,7 @@ shipping a random matrix.
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import threading
@@ -96,10 +97,6 @@ def _probe(qv: np.ndarray, c_ids, c_mat, c_norm, n_probe: int) -> list[int]:
     return sorted(range(len(c_ids)), key=lambda j: (-sims[j], c_ids[j]))[:n_probe]
 
 
-def _sql_array(items) -> str:
-    return "array(" + ",".join(items) + ")"
-
-
 def _adc_ranked(encoded: DataFrame, qs: list[tuple]) -> DataFrame:
     """ADC-score ``encoded`` (id, codes[, cid]) against the query batch
     ``qs`` and rank per query: (query_id, neighbor_id, score, rank),
@@ -110,17 +107,20 @@ def _adc_ranked(encoded: DataFrame, qs: list[tuple]) -> DataFrame:
     coarse term per probed cell, aligned with ``cells``) is None unless
     residual-encoded.
 
-    The per-query values ride as DATA, not code: ONE literal
-    ``array(named_struct('query_id', q, 'luts', array(<m_sub LUTs>)
-    [, 'cells', array(...)[, 'cterms', array(...)]]))`` is exploded
-    against the codes. Catalyst folds it into a single literal object,
-    so the stage's generated code is the same for every query batch of
-    an index and the codegen cache hits; inline per-query literals
+    The per-query values ride as DATA, not code: the batch is ONE JSON
+    string literal, ``from_json``-parsed into ``array<struct<query_id,
+    luts[, cells[, cterms]]>>`` and exploded against the codes.
+    Catalyst folds the parse into a single literal object, so the
+    stage's generated code is the same for every query batch of an
+    index and the codegen cache hits; inline per-query literals
     (``cid IN (...)``, query ids, LUT arrays inside the chain) forced
-    fresh Janino compiles on every query instead. A row is scored only
-    where ``array_contains(q.cells, cid)``. The score is the
-    left-associated sum of per-subspace LUT lookups ``round``ed to 6
-    digits, ``(ct + chain)`` when residual — the same doubles in the
+    fresh Janino compiles on every query instead. One string token also
+    keeps the parser and analyser off a ~10^3-node expression tree. The
+    doubles cross exactly: ``json`` writes the shortest round-trip repr
+    and Jackson parses it back to the nearest double, the original. A
+    row is scored only where ``array_contains(q.cells, cid)``. The
+    score is the left-associated sum of per-subspace LUT lookups
+    ``round``ed to 6 digits, ``(ct + chain)`` when residual — the
     same fold order as the SQL oracle's replay."""
     if not qs:
         # no queries → empty result, not an array of zero structs (a
@@ -131,17 +131,19 @@ def _adc_ranked(encoded: DataFrame, qs: list[tuple]) -> DataFrame:
         )
     probed = qs[0][2] is not None
     residual = qs[0][3] is not None
-    structs = []
+    ddl = "query_id:bigint,luts:array<array<double>>"
+    if probed:
+        ddl += ",cells:array<bigint>"
+    if residual:
+        ddl += ",cterms:array<double>"
+    batch = []
     for qid, luts, cells, cterms in qs:
-        fields = [
-            f"'query_id',{int(qid)}L",
-            "'luts'," + _sql_array(_sql_array(map(_sql_double, lut)) for lut in luts),
-        ]
+        q = {"query_id": int(qid), "luts": [[float(x) for x in lut] for lut in luts]}
         if probed:
-            fields.append("'cells'," + _sql_array(f"{int(c)}L" for c in cells))
+            q["cells"] = [int(c) for c in cells]
         if residual:
-            fields.append("'cterms'," + _sql_array(map(_sql_double, cterms)))
-        structs.append("named_struct(" + ",".join(fields) + ")")
+            q["cterms"] = [float(x) for x in cterms]
+        batch.append(q)
     chain = "element_at(element_at(q.luts,1),(element_at(codes,1)+1))"
     for s in range(2, len(qs[0][1]) + 1):
         chain = f"({chain}+element_at(element_at(q.luts,{s}),(element_at(codes,{s})+1)))"
@@ -158,7 +160,9 @@ def _adc_ranked(encoded: DataFrame, qs: list[tuple]) -> DataFrame:
             F.col("id").alias("neighbor_id"),
             *(["cid"] if probed else []),
             "codes",
-            F.expr("explode(" + _sql_array(structs) + ")").alias("q"),
+            F.explode(
+                F.from_json(F.lit(json.dumps(batch)), f"array<struct<{ddl}>>")
+            ).alias("q"),
         )
         .filter(keep)
         .select(
@@ -1302,11 +1306,6 @@ def _handle_put(path: str, listing, handle) -> None:
             _handles.popitem(last=False)
 
 
-def _handle_drop(path: str) -> None:
-    with _handles_lock:
-        _handles.pop(path.rstrip("/"), None)
-
-
 def _ivfpq_index_load(spark, path: str):
     """A persisted IVF-PQ index's driver-scale state (meta, c_ids,
     c_mat, c_norm, cbs), served from the session-resident handle while
@@ -1332,8 +1331,6 @@ def _ivfpq_index_read(spark, path: str):
     back to the r11 format/1 single-JSON layout when
     ``ivfpq_meta.json`` is present on a driver-readable path. Returns
     (meta, c_ids, c_mat, c_norm, cbs)."""
-    import json
-
     jmeta = os.path.join(path, "ivfpq_meta.json")
     if "://" not in path and os.path.exists(jmeta):
         with open(jmeta) as f:
@@ -1465,7 +1462,6 @@ def ivfpq_index_build(
         "train_distortion": float(train_distortion),
     }
     _write_index_meta(spark, path, meta)
-    _handle_drop(path)
     return meta | {
         "c_ids": [int(x) for x in c_ids],
         "c_mat": [[float(x) for x in row] for row in c_mat],
@@ -1578,13 +1574,6 @@ def ivfpq_index_append(
     new_meta = dict(meta)
     new_meta["n_rows"] = int(meta["n_rows"]) + int(n_new)
     _write_index_meta(spark, path, new_meta)
-    # the frozen quantizers stay valid: re-key the handle to the new
-    # meta rather than dropping it, so the next query does not reload
-    listing = _meta_listing(spark, path.rstrip("/"))
-    if listing is None:
-        _handle_drop(path)
-    else:
-        _handle_put(path.rstrip("/"), listing, (new_meta, c_ids, c_mat, c_norm, cbs))
     return new_meta
 
 

@@ -1159,9 +1159,9 @@ class TestSimilarity:
 
     def test_ivfpq_index_handle_sees_append(self, spark, tmp_path):
         """A vector appended after a query (so with a warm handle) is
-        returned by the next query: the append re-keys the handle, and
-        the codes relation is re-listed per query. The rows equal a
-        cold load's."""
+        returned by the next query: the append rewrites meta, so the
+        listing check reloads the handle, and the codes relation is
+        re-listed per query. The rows equal a cold load's."""
         from nekton_spark.functions import similarity as sim
 
         rows, df = self._handle_corpus(spark, 59)
@@ -1212,27 +1212,6 @@ class TestSimilarity:
         shutil.rmtree(p)
         shutil.copytree(other, p)
         assert query(p) == inline(10)
-
-    def test_ivfpq_index_refused_append_keeps_rows(self, spark, tmp_path):
-        """A refused append (drift, duplicate ids) leaves the next
-        query's rows unchanged."""
-        from nekton_spark.functions import similarity as sim
-
-        rows, df = self._handle_corpus(spark, 67, n=80)
-        schema = "vec_id long, embedding array<double>"
-        p = str(tmp_path / "idx")
-        sim.ivfpq_index_build(df, p, coarse="sample", centroid_stride=10)
-        q = df.filter(F.col("vec_id") < 3)
-        before = sorted(map(tuple, sim.ivfpq_index_query(spark, p, q, k=3).collect()))
-        drifted = spark.createDataFrame(
-            [(1000 + i, [100.0 * x for x in v]) for i, v in rows[:20]], schema
-        )
-        with pytest.raises(ValueError, match="drift"):
-            sim.ivfpq_index_append(drifted, p)
-        with pytest.raises(ValueError, match="shares 5 id"):
-            sim.ivfpq_index_append(spark.createDataFrame(rows[:5], schema), p, drift_tol=1e9)
-        after = sorted(map(tuple, sim.ivfpq_index_query(spark, p, q, k=3).collect()))
-        assert after == before
 
     def test_ivfpq_index_warm_query_jobs(self, spark, tmp_path):
         """A warm query on an unchanged index runs exactly 3 jobs (the
@@ -1328,12 +1307,14 @@ class TestSimilarity:
         """Append refuses (a) a batch whose PQ distortion drifts past
         drift_tol x the build's training distortion — frozen codebooks
         would silently lose recall — and (b) id collisions with the
-        existing codes, which would corrupt every later query."""
+        existing codes, which would corrupt every later query. Either
+        refusal leaves the next query's rows unchanged."""
         import random
 
         from nekton_spark.functions.similarity import (
             ivfpq_index_append,
             ivfpq_index_build,
+            ivfpq_index_query,
         )
 
         rng = random.Random(53)
@@ -1342,6 +1323,8 @@ class TestSimilarity:
         df = spark.createDataFrame(rows, schema)
         p = str(tmp_path / "idx")
         ivfpq_index_build(df, p, coarse="sample", centroid_stride=10)
+        q = df.filter(F.col("vec_id") < 3)
+        before = sorted(map(tuple, ivfpq_index_query(spark, p, q, k=3).collect()))
         drifted = spark.createDataFrame(
             [(1000 + i, [100.0 * x for x in v]) for i, v in rows[:20]], schema
         )
@@ -1350,6 +1333,8 @@ class TestSimilarity:
         dup = spark.createDataFrame(rows[:5], schema)
         with pytest.raises(ValueError, match="shares 5 id"):
             ivfpq_index_append(dup, p, drift_tol=1e9)
+        after = sorted(map(tuple, ivfpq_index_query(spark, p, q, k=3).collect()))
+        assert after == before
 
     def test_ann_processor_refuses_empty_query_ids(self, spark):
         """r11 ADVICE: query_ids: [] is a spec typo — refusing beats
