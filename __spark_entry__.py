@@ -3657,14 +3657,20 @@ def classifier_score_check(spark, sf):
 
 # Queries whose engine code changed in the latest change set, each with
 # the reason. They lead the driver's correctness window; a change that
-# touches an engine path replaces this list with its own rows.
+# touches an engine path replaces this list with its own rows. At most
+# 9 rows, so the 41 stalest rows still fit the 50-row window; sibling
+# rows that run the same code under other parameters (ann_topk_lsh_mp,
+# ann_topk_ivf_kmeans, ann_topk_ivfpq_residual_k) are left to rotation.
 PRIORITY = [
-    "ann_index_roundtrip",  # session-resident index handle, fixed codes schema, literal ADC batch
-    "ann_topk_ivfpq",  # probed-cell guard moved from CASE/IN into the literal ADC batch
-    "ann_topk_pq",  # unprobed ADC scan on the literal batch; queries sorted on the driver
-    "ann_topk_pq_rerank",  # pq_topk nominates its re-rank candidates through the new ADC form
-    "ann_topk_ivfpq_residual",  # per-cell coarse term moved from a CASE chain to aligned cterms
-    "ann_topk_ivfpq_residual_k",  # the same residual ADC form under trained k-means cells
+    "ann_topk_bruteforce",  # rank tail moved to the shared _top_k
+    "ann_topk_lsh",  # rank tail moved to the shared _top_k
+    "ann_topk_ivf",  # assignment via the shared _nearest_cell kernel; _top_k tail
+    "ann_topk_pq",  # _ivfpq_train prologue, _encode_pass with a null cid, _sq_dists codes
+    "ann_topk_pq_rerank",  # re-rank moved to the shared _exact_rerank
+    "ann_topk_ivfpq",  # train → _encode_pass → _ivfpq_adc_topk, the index build/query stages
+    "ann_topk_ivfpq_residual",  # residual training/encode via the shared helpers; cterms from the probe dots
+    "ann_index_roundtrip",  # shared build/encode stages; meta written and read with a fixed schema
+    "kmeans_tiered",  # _local_assign and the codebook/matrix assigners call similarity._sq_dists
 ]
 
 

@@ -16,7 +16,7 @@ smallest-ID rule would waste seeds on id-adjacent near-duplicate
 blocks, which real crawl corpora have; the r8 judge falsified exactly
 that degeneracy), every distance is
 a left-associated double fold (bit-identical to the DuckDB oracle's
-unrolled arithmetic — see similarity.dot), and recomputed centroids
+unrolled arithmetic — see similarity._sq_dists), and recomputed centroids
 are rounded to 1e-6 so partial-aggregation summation order can't leak
 into assignments.
 
@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..materialize import materialize
+from .similarity import _sq_dists
 
 
 # auto-k policy: clusters sized ~TARGET_CLUSTER rows, floor 8 — the
@@ -140,15 +141,13 @@ def _matrix_assigner(centroids: list[list[float]]):
     def _assign(vs: pd.Series) -> pd.Series:
         import numpy as np
 
-        k, dim = C.shape
+        k = len(C)
         row_chunk = 1024
-        # bound the (rows, cids) accumulator to ~32 MB. The distance is
-        # accumulated dimension by dimension (acc += dcol²) — the exact
-        # left-fold order (identical to cumsum(..., axis=-1)[..., -1],
-        # the engine-parity contract) — with per-step temporaries of
-        # rows × cids × 8 B instead of a rows × cids × dim 'diff' cube:
-        # the 64-128 MB cube allocations per block measured as
-        # minute-scale memory-compaction stalls on a loaded host.
+        # bound the (rows, cids) accumulator to ~32 MB; _sq_dists keeps
+        # per-step temporaries at rows × cids × 8 B instead of a rows ×
+        # cids × dim 'diff' cube, whose 64-128 MB allocations per block
+        # measured as minute-scale memory-compaction stalls on a loaded
+        # host.
         cid_chunk = max(1, (32 << 20) // (8 * row_chunk))
         out = np.empty(len(vs), dtype=np.int32)
         P = np.asarray([np.asarray(v, dtype=np.float64) for v in vs])
@@ -157,11 +156,7 @@ def _matrix_assigner(centroids: list[list[float]]):
             best_d = np.full(len(p), np.inf)
             best_c = np.zeros(len(p), dtype=np.int32)
             for c0 in range(0, k, cid_chunk):
-                c = C[c0 : c0 + cid_chunk]
-                d = np.zeros((len(p), len(c)))
-                for j in range(dim):  # exact left fold over dimensions
-                    dcol = p[:, j, None] - c[None, :, j]
-                    d += dcol * dcol
+                d = _sq_dists(p, C[c0 : c0 + cid_chunk])
                 cand = d.argmin(axis=1)  # first index on ties
                 cand_d = d[np.arange(len(p)), cand]
                 upd = cand_d < best_d  # strict: earlier cid chunk keeps ties
@@ -356,11 +351,7 @@ def train_subspace_codebooks(
                 ss, cl, po, va = [], [], [], []
                 for s in range(m_sub):
                     P = V[:, s * d0 : (s + 1) * d0]
-                    d = np.zeros((nrow, len(C[s])))
-                    for j in range(d0):  # exact left fold over dimensions
-                        dcol = P[:, j, None] - C[s][None, :, j]
-                        d += dcol * dcol
-                    a = d.argmin(axis=1)  # first index on ties
+                    a = _sq_dists(P, C[s]).argmin(axis=1)  # first index on ties
                     ss.append(np.full(nrow * d0, s, dtype=np.int32))
                     cl.append(np.repeat(a.astype(np.int32), d0))
                     po.append(np.tile(np.arange(d0, dtype=np.int32), nrow))
@@ -399,14 +390,9 @@ def _local_assign(P, C):
     import numpy as np
 
     out = np.empty(len(P), dtype=np.int32)
-    dim = P.shape[1]
     for r0 in range(0, len(P), 1024):
         p = P[r0 : r0 + 1024]
-        d = np.zeros((len(p), len(C)))
-        for j in range(dim):  # exact left fold over dimensions
-            dcol = p[:, j, None] - C[None, :, j]
-            d += dcol * dcol
-        out[r0 : r0 + len(p)] = d.argmin(axis=1)  # first index on ties
+        out[r0 : r0 + len(p)] = _sq_dists(p, C).argmin(axis=1)  # first index on ties
     return out
 
 

@@ -1,24 +1,34 @@
 r"""Similarity search over embedding columns (SURVEY §2.5).
 
-Two paths:
+Seven top-k entry points share one skeleton: NOMINATE candidates, SCORE
+them, optionally RE-RANK the nominees exactly — the partition → prune →
+verify shape of REPOSE (ICDE 2021). Every stage has one helper here, so
+each algorithm decision (tie order, fold order, code layout, re-rank
+plan) lives in one place:
 
-- :func:`brute_force_topk` — exact cosine top-k: broadcast the (small)
-  query set against the corpus, score with codegen'd array expressions
-  (``aggregate``/``zip_with`` — JVM-side, no Python), take top-k per
-  query with a window. The *oracle* and the right answer whenever the
-  query set is small: one broadcast, zero shuffles of the corpus, a
-  partial top-k per partition then a tiny final top-k (Catalyst plans
-  rank-filter windows with partial sort).
-- :func:`lsh_topk` — the scale path: random-hyperplane LSH (sign-bit
-  sketch) bucketing; candidates = corpus rows sharing a band with the
-  query sketch; exact cosine re-rank inside candidates only. At 100 TB
-  the corpus is hashed once (map-only), bucketed (one shuffle on
-  uniform sketch bands), and each query probes its buckets instead of
-  scanning the corpus.
+- :func:`brute_force_topk` — nominates the whole corpus, scores exact
+  cosine against the broadcast query set: the oracle, and the right
+  answer whenever the query set is small.
+- :func:`lsh_topk` — nominates rows sharing a random-hyperplane sketch
+  band (optionally a Hamming-1 probe) with the query, scores exact
+  cosine per bucket.
+- :func:`ivf_topk` — nominates the rows of the ``n_probe`` coarse
+  cells nearest the query (:func:`_nearest_cell`), scores exact
+  cosine.
+- :func:`pq_topk` / :func:`ivfpq_topk` / :func:`ivfpq_residual_topk`
+  — nominate every row or the probed cells' rows, score the ADC
+  approximation over one-byte PQ codes (:func:`_encode_pass`,
+  :func:`_ivfpq_adc_topk`); the index build/query/append split
+  persists the same codes.
+- :func:`pq_topk_rerank` and ``ivfpq_residual_topk(rerank_mult=…)`` —
+  re-rank the ADC nominees with exact cosine (:func:`_exact_rerank`).
 
-Hyperplanes are generated deterministically from :func:`~.hashing.hash60`
-(seeded), so results are reproducible across engines/runs without
-shipping a random matrix.
+Every ranking ends in :func:`_top_k`: (score desc, neighbor_id asc).
+Every float sum is a 0.0-seeded left fold over dimensions
+(:func:`_fold_dots`, :func:`_sq_dists`), the order the SQL oracles
+replay, so results are bit-identical across engines. Hyperplanes are
+generated deterministically from :func:`~.hashing.hash60` (seeded), so
+no random matrix is shipped.
 """
 
 from __future__ import annotations
@@ -28,6 +38,7 @@ import math
 import os
 import threading
 from collections import OrderedDict
+from types import SimpleNamespace
 
 import numpy as np
 import pandas as pd
@@ -43,6 +54,12 @@ from .hashing import hash60_py
 
 def as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _id_vec(df: DataFrame, id_col: str, vec_col: str, i: str = "id", v: str = "v") -> DataFrame:
+    """``df``'s id and vector columns as (``i``, ``v``), the vector cast
+    to array<double>."""
+    return df.select(F.col(id_col).alias(i), as_double(F.col(vec_col)).alias(v))
 
 
 def _sql_double(x: float) -> str:
@@ -65,42 +82,44 @@ def _collect_queries(queries: DataFrame, id_col: str, vec_col: str) -> list:
     """The bounded query side as driver rows (qid, qv), sorted by qid on
     the driver: one job, where a Spark ``orderBy`` adds a sampling
     job."""
-    rows = queries.select(
-        F.col(id_col).alias("qid"), as_double(F.col(vec_col)).alias("qv")
-    ).collect()
+    rows = _id_vec(queries, id_col, vec_col, "qid", "qv").collect()
     rows.sort(key=lambda r: r.qid)
     return rows
 
 
-def _adc_luts(qv: list[float], cbs, m_sub: int, d0: int, ksub: int) -> list[list[float]]:
+def _adc_luts(qv: list[float], cbs, d0: int) -> list[list[float]]:
     """Per-subspace lookup tables LUT[s][c] = <q_s, codebook[s][c]>,
     each a 0.0-seeded left fold over the subspace (the oracle's
     unrolled dot)."""
     luts = []
-    for s in range(m_sub):
+    for s, cb in enumerate(cbs):
         lut = []
-        for c in range(ksub):
+        for c in cb:
             acc = 0.0
             for j in range(d0):
-                acc += qv[s * d0 + j] * cbs[s][c][j]
+                acc += qv[s * d0 + j] * c[j]
             lut.append(acc)
         luts.append(lut)
     return luts
 
 
-def _probe(qv: np.ndarray, c_ids, c_mat, c_norm, n_probe: int) -> list[int]:
-    """Row indexes of the ``n_probe`` coarse cells nearest ``qv`` by
-    exact-fold cosine, ties to the smaller cid (ivf_topk's window
-    order)."""
-    qn = np.sqrt(np.cumsum(qv * qv)[-1])
-    sims = _fold_dots(qv[None, :], c_mat)[0] / (qn * c_norm)
-    return sorted(range(len(c_ids)), key=lambda j: (-sims[j], c_ids[j]))[:n_probe]
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The top ``k`` rows per query of (query_id, neighbor_id, score),
+    ranked by (score desc, neighbor_id asc): (query_id, neighbor_id,
+    score, rank). Catalyst plans the rank filter as a partial top-k per
+    partition, never a global sort."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "score", "rank")
+    )
 
 
-def _adc_ranked(encoded: DataFrame, qs: list[tuple]) -> DataFrame:
-    """ADC-score ``encoded`` (id, codes[, cid]) against the query batch
-    ``qs`` and rank per query: (query_id, neighbor_id, score, rank),
-    rank by (score desc, neighbor_id asc), the query itself excluded.
+def _adc_ranked(encoded: DataFrame, qs: list[tuple], k: int) -> DataFrame:
+    """ADC-score ``encoded`` (id, cid, codes) against the query batch
+    ``qs`` and keep the :func:`_top_k` per query, the query itself
+    excluded. ``cid`` is read only when the batch is probed.
 
     Each element of ``qs`` is ``(qid, luts, cells, cterms)``. ``cells``
     (probed cids) is None for an unprobed scan; ``cterms`` (the exact
@@ -171,8 +190,7 @@ def _adc_ranked(encoded: DataFrame, qs: list[tuple]) -> DataFrame:
             F.expr(f"round({chain},6)").alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w))
+    return _top_k(scored, k)
 
 
 def _local_df(spark, rows: list[tuple], ddl: str) -> DataFrame:
@@ -298,42 +316,6 @@ def ensure_parallelism(df: DataFrame, bytes_per_slice: int = 64 << 10) -> DataFr
     return df
 
 
-def dot(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Dot product. With a known ``dim`` the sum is unrolled into a flat
-    left-associated expression chain: higher-order functions
-    (aggregate/zip_with) are *interpreted* per element in Spark — they
-    never enter whole-stage codegen — so the unrolled form is ~10×
-    faster on wide candidate joins. Left association keeps the float
-    accumulation order identical to the HOF fold (and to the DuckDB
-    oracle's list_reduce)."""
-    if dim is None:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-        )
-    # NOTE: measured SLOWER than the HOF fold for dim=64 inside wide
-    # operators — the unrolled tree exceeds codegen method limits and
-    # falls back to interpretation. Kept for narrow/small-dim uses.
-    terms = [F.element_at(a, i + 1) * F.element_at(b, i + 1) for i in range(dim)]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
-def norm(a: Column, dim: int | None = None) -> Column:
-    if dim is None:
-        return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
-    terms = [F.element_at(a, i + 1) * F.element_at(a, i + 1) for i in range(dim)]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return F.sqrt(out)
-
-
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
-
-
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -344,28 +326,15 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact top-k: (query_id, neighbor_id, score) — score = cosine,
     ties broken by neighbor id; self-matches excluded."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
+    q = _id_vec(queries, id_col, vec_col, "query_id", "qv")
     c = ensure_parallelism(
-        corpus.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")),
-        VEC_BYTES_PER_SLICE,
+        _id_vec(corpus, id_col, vec_col, "neighbor_id", "cv"), VEC_BYTES_PER_SLICE
     )
     cos = cosine_udf()
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cos(F.col("qv"), F.col("cv")), 6).alias("score"),
-        )
+    scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).select(
+        "query_id", "neighbor_id", F.round(cos(F.col("qv"), F.col("cv")), 6).alias("score")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def hyperplane_values(seed: int, dim: int) -> list[float]:
@@ -377,33 +346,11 @@ def hyperplane_values(seed: int, dim: int) -> list[float]:
     return [1.0 if hash60_py(str(j), seed) & 1 else -1.0 for j in range(dim)]
 
 
-def hyperplane(seed: int, dim: int) -> Column:
-    return F.array(*[F.lit(v) for v in hyperplane_values(seed, dim)])
-
-
-def sketch_bits(vec: Column, dim: int, n_bits: int = 16) -> Column:
-    """n_bits sign bits of <v, h_i> packed into a long (pure-expression
-    form; see :func:`sketch_udf` for the fast path)."""
-    bits = []
-    for i in range(n_bits):
-        h = hyperplane(7000 + i, dim)
-        bits.append(
-            F.when(dot(vec, h) >= 0, F.lit(2**i).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
 def sketch_udf(dim: int, n_bits: int = 16):
-    """Arrow-batched sketch: numpy replaces ~1000 interpreted HOF lambda
-    steps per row (measured 1.25 ms/row → µs/row). Exactness: the dot
-    products use ``cumsum`` along the last axis, whose final element is
-    by definition the left-to-right fold — bit-identical to the
-    expression form and to the DuckDB oracle's ``list_reduce``."""
+    """Arrow-batched sign sketch: ``n_bits`` sign bits of <v, h_i>
+    packed into a long, h_i = ``hyperplane_values(7000 + i, dim)``.
+    Exactness: each dot is the 0.0-seeded left fold over dimensions —
+    bit-identical to the DuckDB oracle's ``list_reduce``."""
     if not 0 < n_bits <= 62:
         # bit 63 is the long's sign bit and numpy's 1<<63 wraps to
         # INT64_MIN (and 1<<64 to 0) — a silent wrong sketch, so refuse
@@ -442,6 +389,36 @@ def _fold_dots(C: np.ndarray, Q: np.ndarray) -> np.ndarray:
     for j in range(C.shape[1]):
         acc += C[:, j, None] * Q[None, :, j]
     return acc
+
+
+def _sq_dists(P: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """All-pairs squared-L2 distances of the rows of ``P`` to the rows
+    of ``C``, each the 0.0-seeded left fold over dimensions (the
+    oracle's unrolled order), with (rows, codes) working memory like
+    :func:`_fold_dots`. Every PQ encode, distortion and k-means
+    assignment takes its argmin (first index on ties) or min here."""
+    d = np.zeros((len(P), len(C)))
+    for j in range(P.shape[1]):
+        dcol = P[:, j, None] - C[None, :, j]
+        d += dcol * dcol
+    return d
+
+
+def _nearest_cell(V: np.ndarray, c_mat: np.ndarray, c_norm: np.ndarray) -> np.ndarray:
+    """Row index into the cid-sorted centroid matrix ``c_mat`` of each
+    row's nearest coarse cell by exact-fold cosine; argmax keeps the
+    first index, so ties go to the smallest cid (``ORDER BY sim DESC,
+    cid ASC``). Rows are chunked so the (rows, centroids) score matrix
+    stays ~32 MB: a 10k-row Arrow batch against the 65536-centroid cap
+    would otherwise allocate a 5 GB matrix per batch."""
+    nv = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
+    best = np.empty(len(V), dtype=np.int64)
+    row_chunk = max(1, (32 << 20) // (8 * max(1, len(c_mat))))
+    for r0 in range(0, len(V), row_chunk):
+        r1 = min(r0 + row_chunk, len(V))
+        S = _fold_dots(V[r0:r1], c_mat) / (nv[r0:r1, None] * c_norm[None, :])
+        best[r0:r1] = S.argmax(axis=1)
+    return best
 
 
 def cosine_udf():
@@ -680,12 +657,7 @@ def lsh_topk(
     scored = scored_raw.select(
         "query_id", "neighbor_id", F.round("score", 6).alias("score")
     ).dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def _resolve_coarse(
@@ -813,9 +785,9 @@ def ivf_topk(
        pseudo-random sample is the textbook "IVF-flat with random
        seeds" baseline. The centroid set is broadcast (small).
     2. **Assignment** (the n×C dot products every IVF build pays):
-       broadcast join + Arrow-batched exact-fold cosine, then
-       ``max_by`` argmax — partial aggregation runs map-side, so the
-       shuffle carries ONE row per corpus vector, not n×C rows.
+       map-only — each Arrow batch scores the centroid matrix shipped
+       in the task closure with :func:`_nearest_cell`, so every
+       corpus vector gets ONE cid and no n×C rows exist.
     3. **Probe + search**: queries score the broadcast centroids the
        same way, keep ``n_probe`` lists, and join assignments on the
        centroid id — the only corpus-sized shuffle keys on centroid id
@@ -844,18 +816,8 @@ def ivf_topk(
     cosine on both engines), NOT to brute force — recall vs brute
     force is a quality property tested separately."""
     coarse = _resolve_coarse(coarse, centroid_stride, coarse_k)
-    base = corpus.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-    base = ensure_parallelism(base, VEC_BYTES_PER_SLICE)
+    base = ensure_parallelism(_id_vec(corpus, id_col, vec_col), VEC_BYTES_PER_SLICE)
     cos = cosine_udf()
-    # Assignment pays the n×C dot products every IVF build pays, but a
-    # broadcast JOIN would ship both 64-dim vectors through Arrow for
-    # all n×C rows (measured 10× slower at a 10× rehearsal). Instead
-    # the centroid MATRIX — O(C) driver data, same status as the
-    # literal hyperplanes in sketch_bits — rides the task closure, and
-    # each corpus batch scores all centroids in one exact-fold kernel:
-    # every vector crosses to Python exactly once. argmax over the
-    # cid-sorted matrix picks the smallest cid on ties — identical to
-    # ORDER BY sim DESC, cid ASC.
     # one count job buys both the √n sizing and the train stride; an
     # explicit sampled stride needs neither, so it keeps paying zero
     # count jobs (a full count at corpus scale is not free)
@@ -871,42 +833,30 @@ def ivf_topk(
     cents = _local_df(
         corpus.sparkSession,
         [(int(i), [float(x) for x in v]) for i, v in zip(c_ids, c_mat)],
-        "cid long, cv array<double>",
+        _CENTROIDS_DDL,
     )
     c_norm = np.sqrt(np.cumsum(c_mat * c_mat, axis=1)[:, -1])
 
-    assign_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("v", T.ArrayType(T.DoubleType())),
-            T.StructField("cid", T.LongType()),
-        ]
-    )
-
+    # Assignment pays the n×C dot products every IVF build pays, but a
+    # broadcast JOIN would ship both 64-dim vectors through Arrow for
+    # all n×C rows (measured 10× slower at a 10× rehearsal). Instead
+    # the centroid MATRIX — O(C) driver data — rides the task closure,
+    # and each corpus batch scores all centroids in one exact-fold
+    # kernel (:func:`_nearest_cell`): every vector crosses to Python
+    # exactly once.
     def assign(batches: "pd.DataFrame") -> "pd.DataFrame":
-        # chunk rows so the (rows, centroids) score matrix stays ~32 MB:
-        # a 10k-row Arrow batch against the 65536-centroid cap would
-        # otherwise allocate a 5 GB matrix per batch (see the
-        # memory-compaction findings on _matrix_assigner/sketch_udf)
-        row_chunk = max(1, (32 << 20) // (8 * max(1, len(c_ids))))
         for pdf in batches:
             if len(pdf) == 0:
                 yield pd.DataFrame({"id": [], "v": [], "cid": []})
                 continue
             V = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            nv = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
-            best = np.empty(len(V), dtype=np.int64)
-            for r0 in range(0, len(V), row_chunk):
-                r1 = min(r0 + row_chunk, len(V))
-                dots = _fold_dots(V[r0:r1], c_mat)
-                S = dots / (nv[r0:r1, None] * c_norm[None, :])
-                best[r0:r1] = S.argmax(axis=1)
+            best = _nearest_cell(V, c_mat, c_norm)
             yield pd.DataFrame(
                 {"id": pdf["id"].to_numpy(), "v": pdf["v"], "cid": c_ids[best]}
             )
 
-    assigned = base.mapInPandas(assign, assign_schema)
-    q = queries.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
+    assigned = base.mapInPandas(assign, "id long, v array<double>, cid long")
+    q = _id_vec(queries, id_col, vec_col, "query_id", "qv")
     wp = Window.partitionBy("query_id").orderBy(F.desc("psim"), F.asc("cid"))
     probed = (
         q.join(F.broadcast(cents))
@@ -924,12 +874,7 @@ def ivf_topk(
             F.round(cos(F.col("qv"), F.col("v")), 6).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _top_k(scored, k)
 
 
 PQ_TRAIN_CAP = 1 << 16
@@ -967,9 +912,10 @@ def pq_topk(
        whatever the corpus size, and the stride is replayed from
        count(*) by the SQL oracle (n from parquet footers here, equal
        for scan-shaped inputs).
-    2. **Encode** (map-only, one Arrow pass): per subspace, exact
-       left-fold squared-L2 argmin to the codebook, first-index ties —
-       (id, codes: array<int>). Zero shuffles.
+    2. **Encode** (map-only, one Arrow pass — :func:`_encode_pass`
+       without cells): per subspace, exact left-fold squared-L2 argmin
+       to the codebook, first-index ties — (id, cid: null, codes:
+       array<int>). Zero shuffles.
     3. **ADC scan** (map-only + per-query top-k): queries are collected
        (bounded small side by contract) and their per-subspace lookup
        tables LUT[s][c] = <q_sub, codebook[s][c]> computed driver-side
@@ -983,56 +929,9 @@ def pq_topk(
     same exact folds); recall vs brute force is a separate quality
     property (tests/test_functions.py asserts a floor on the synth
     corpus)."""
-    if dim % m_sub != 0:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    d0 = dim // m_sub
-    from .clustering import train_subspace_codebooks
-
-    base = corpus.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-    base = ensure_parallelism(base, VEC_BYTES_PER_SLICE)
-    n = _estimate_rows(base)
-    stride = max(1, -(-n // train_cap))
-    tr = base.filter(F.col("id") % stride == 0)
-    # all m_sub codebooks in 2 bounded jobs (bit-identical to the
-    # per-subspace train_centroids loop — see train_subspace_codebooks)
-    cbs = train_subspace_codebooks(tr, m_sub, d0, ksub, iters)
-    C = [np.asarray(cb, dtype=np.float64) for cb in cbs]
-
-    code_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("codes", T.ArrayType(T.IntegerType())),
-        ]
-    )
-
-    def encode(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"id": [], "codes": []})
-                continue
-            V = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            codes = np.empty((len(V), m_sub), dtype=np.int32)
-            for s in range(m_sub):
-                P = V[:, s * d0 : (s + 1) * d0]
-                d = np.zeros((len(P), len(C[s])))
-                for j in range(d0):  # exact left fold over dimensions
-                    dcol = P[:, j, None] - C[s][None, :, j]
-                    d += dcol * dcol
-                codes[:, s] = d.argmin(axis=1)  # first index on ties
-            yield pd.DataFrame(
-                {"id": pdf["id"].to_numpy(), "codes": list(codes)}
-            )
-
-    encoded = base.mapInPandas(encode, code_schema)
-    # queries are the bounded small side by contract
-    qs = [
-        (r.qid, _adc_luts(list(r.qv), cbs, m_sub, d0, ksub), None, None)
-        for r in _collect_queries(queries, id_col, vec_col)
-    ]
-    return (
-        _adc_ranked(encoded, qs)
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+    t = _ivfpq_train(corpus, id_col, vec_col, dim, m_sub, ksub, iters, train_cap)
+    return _ivfpq_adc_topk(
+        _encode_pass(t.base, t.cbs, t.d0), queries, t.cbs, t.d0, k, id_col, vec_col
     )
 
 
@@ -1090,32 +989,17 @@ def ivfpq_topk(
     force is a separate quality property (global codebooks — see
     :func:`ivfpq_residual_topk` for the residual-encoded variant that
     recovers the recall global codebooks lose)."""
-    if dim % m_sub != 0:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    coarse = _resolve_coarse(coarse, centroid_stride, coarse_k)
-    d0 = dim // m_sub
-    from .clustering import train_subspace_codebooks
-
-    base = corpus.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-    base = ensure_parallelism(base, VEC_BYTES_PER_SLICE)
-    n = _estimate_rows(base)
-    pq_stride = max(1, -(-n // train_cap))
-    c_ids, c_mat, _kc, _cs = _coarse_centroids(
-        base, coarse, n, pq_stride,
-        centroid_stride, coarse_k, coarse_iters, max_centroids,
+    t = _ivfpq_train(
+        corpus, id_col, vec_col, dim, m_sub, ksub, iters, train_cap,
+        (coarse, centroid_stride, coarse_k, coarse_iters, max_centroids),
     )
-    c_norm = np.sqrt(np.cumsum(c_mat * c_mat, axis=1)[:, -1])
-
-    tr = base.filter(F.col("id") % pq_stride == 0)
-    cbs = train_subspace_codebooks(tr, m_sub, d0, ksub, iters)
-    encoded = _ivfpq_encode_pass(base, c_ids, c_mat, c_norm, cbs, m_sub, d0)
     return _ivfpq_adc_topk(
-        encoded, queries, c_ids, c_mat, c_norm, cbs,
-        m_sub, d0, ksub, n_probe, k, id_col, vec_col,
+        _encode_pass(t.base, t.cbs, t.d0, t.cells), queries, t.cbs, t.d0, k,
+        id_col, vec_col, t.cells, n_probe,
     )
 
 
-# The IVF-PQ codes relation (id, cid, codes): the encode passes' output
+# The PQ codes relation (id, cid, codes): the encode pass's output
 # schema AND the schema every ``path/codes`` read is given, so no read
 # of a persisted index runs a schema-inference job.
 IVFPQ_CODES_SCHEMA = T.StructType(
@@ -1127,81 +1011,156 @@ IVFPQ_CODES_SCHEMA = T.StructType(
 )
 _CENTROIDS_DDL = "cid long, cv array<double>"
 _CODEBOOKS_DDL = "sub int, code int, c array<double>"
+# The one-row parameters relation ``path/meta``: written and read with
+# this schema, so a handle reload runs no schema-inference job.
+_META_DDL = (
+    "format string, m_sub long, ksub long, d0 long, dim long, iters long, "
+    "train_cap long, coarse string, coarse_k long, coarse_iters long, "
+    "centroid_stride long, n_rows long, train_distortion double"
+)
 
 
-def _ivfpq_encode_pass(base, c_ids, c_mat, c_norm, cbs, m_sub, d0):
-    """The fused IVF-PQ build pass (extracted from ivfpq_topk, r11, so
-    the persisted-index build shares it verbatim): ONE Arrow pass
-    computing the coarse cosine-argmax assignment AND the per-subspace
-    raw-vector PQ codes — (id, cid, codes), zero shuffles."""
+def _encode_pass(base: DataFrame, cbs, d0: int, cells=None, residual: bool = False) -> DataFrame:
+    """The PQ family's one Arrow encode pass over ``base`` (id, v):
+    (id, cid, codes) in ``IVFPQ_CODES_SCHEMA``, zero shuffles, each
+    vector crossing to Python once. With ``cells`` (c_ids, c_mat,
+    c_norm) a row's cid is its :func:`_nearest_cell`, else null (the
+    unprobed scan never reads it); ``residual`` encodes v − c(v)
+    instead of v. Each subspace code is the :func:`_sq_dists` argmin
+    over that subspace's codebook, first index on ties."""
     C = [np.asarray(cb, dtype=np.float64) for cb in cbs]
 
-    def build(batches):
-        row_chunk = max(1, (32 << 20) // (8 * max(1, len(c_ids))))
+    def encode(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 yield pd.DataFrame({"id": [], "cid": [], "codes": []})
                 continue
             V = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            nv = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
-            best = np.empty(len(V), dtype=np.int64)
-            for r0 in range(0, len(V), row_chunk):
-                r1 = min(r0 + row_chunk, len(V))
-                dots = _fold_dots(V[r0:r1], c_mat)
-                S = dots / (nv[r0:r1, None] * c_norm[None, :])
-                best[r0:r1] = S.argmax(axis=1)  # ties → smallest cid
-            codes = np.empty((len(V), m_sub), dtype=np.int32)
-            for s in range(m_sub):
-                P = V[:, s * d0 : (s + 1) * d0]
-                d = np.zeros((len(P), len(C[s])))
-                for j in range(d0):  # exact left fold over dimensions
-                    dcol = P[:, j, None] - C[s][None, :, j]
-                    d += dcol * dcol
-                codes[:, s] = d.argmin(axis=1)  # first index on ties
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(),
-                    "cid": c_ids[best],
-                    "codes": list(codes),
-                }
-            )
+            cid = None
+            if cells is not None:
+                c_ids, c_mat, c_norm = cells
+                best = _nearest_cell(V, c_mat, c_norm)
+                cid = c_ids[best]
+                if residual:
+                    V = V - c_mat[best]
+            codes = np.empty((len(V), len(C)), dtype=np.int32)
+            for s, cb in enumerate(C):
+                codes[:, s] = _sq_dists(V[:, s * d0 : (s + 1) * d0], cb).argmin(axis=1)
+            yield pd.DataFrame({"id": pdf["id"].to_numpy(), "cid": cid, "codes": list(codes)})
 
-    return base.mapInPandas(build, IVFPQ_CODES_SCHEMA)
+    return base.mapInPandas(encode, IVFPQ_CODES_SCHEMA)
+
+
+def _ivfpq_train(
+    corpus, id_col, vec_col, dim, m_sub, ksub, iters, train_cap, ivf=None, residual=False
+):
+    """The PQ family's training prologue. Refuses an indivisible
+    ``dim`` and, with ``ivf`` = (coarse, centroid_stride, coarse_k,
+    coarse_iters, max_centroids), mismatched coarse parameters before
+    any Spark job. Then: the (id, v) ``base`` fanned out for the vector
+    kernels, ``n`` from parquet footers, the ≤ ``train_cap`` stride
+    sample ``tr`` (stride = ceil(n / train_cap), replayed from
+    count(*) by the SQL oracles), the coarse ``cells`` (c_ids, c_mat,
+    c_norm) when ``ivf`` is given (else None), and the per-subspace
+    codebooks ``cbs`` (:func:`~.clustering.train_subspace_codebooks`)
+    — trained on the sample's residuals from their nearest cell when
+    ``residual``. Also returns the resolved coarse sizing (``coarse``,
+    ``coarse_k``, ``centroid_stride``) the index meta records."""
+    from .clustering import train_subspace_codebooks
+
+    if dim % m_sub != 0:
+        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
+    if ivf is not None:
+        coarse, centroid_stride, coarse_k, coarse_iters, max_centroids = ivf
+        coarse = _resolve_coarse(coarse, centroid_stride, coarse_k)
+    t = SimpleNamespace(d0=dim // m_sub, cells=None)
+    t.base = ensure_parallelism(_id_vec(corpus, id_col, vec_col), VEC_BYTES_PER_SLICE)
+    t.n = _estimate_rows(t.base)
+    stride = max(1, -(-t.n // train_cap))
+    t.tr = cb_tr = t.base.filter(F.col("id") % stride == 0)
+    if ivf is not None:
+        c_ids, c_mat, t.coarse_k, t.centroid_stride = _coarse_centroids(
+            t.base, coarse, t.n, stride,
+            centroid_stride, coarse_k, coarse_iters, max_centroids,
+        )
+        t.coarse = coarse
+        t.cells = (c_ids, c_mat, np.sqrt(np.cumsum(c_mat * c_mat, axis=1)[:, -1]))
+    if residual:
+        c_ids, c_mat, c_norm = t.cells
+
+        def residuals(batches):
+            for pdf in batches:
+                if len(pdf) == 0:
+                    yield pd.DataFrame({"id": [], "v": []})
+                    continue
+                V = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
+                R = V - c_mat[_nearest_cell(V, c_mat, c_norm)]
+                yield pd.DataFrame({"id": pdf["id"].to_numpy(), "v": list(R)})
+
+        # materialized once: the codebook training runs a seed job and
+        # (iters-1) refinement jobs over this bounded (≤ train_cap)
+        # relation, each of which would recompute the Arrow assignment
+        cb_tr = materialize(t.tr.mapInPandas(residuals, "id long, v array<double>"))
+    t.cbs = train_subspace_codebooks(cb_tr, m_sub, t.d0, ksub, iters)
+    return t
 
 
 def _ivfpq_adc_topk(
-    encoded, queries, c_ids, c_mat, c_norm, cbs,
-    m_sub, d0, ksub, n_probe, k, id_col, vec_col,
+    encoded, queries, cbs, d0, k, id_col, vec_col, cells=None, n_probe=None, residual=False
 ):
-    """The IVF-PQ probe + ADC-scan + top-k stage (extracted from
-    ivfpq_topk, r11, so the persisted-index query path shares it
-    verbatim): driver-side probing over the resident centroid matrix,
-    then :func:`_adc_ranked` scores the probed cells' rows."""
+    """The PQ family's query stage over ``encoded`` (id, cid, codes):
+    collect the bounded query side, build each query's LUTs and, when
+    ``cells`` (c_ids, c_mat, c_norm) is given, probe the ``n_probe``
+    cells nearest it by exact-fold cosine, ties to the smaller cid
+    (ivf_topk's window order); :func:`_adc_ranked` then scores the
+    probed cells' rows (every row without ``cells``). ``residual`` adds
+    the exact coarse term <q, c> per probed cell: the same 0.0-seeded
+    dots the probe ranks by, the oracle's unrolled dot."""
     qs = []
     for r in _collect_queries(queries, id_col, vec_col):
         qv = list(r.qv)
-        cells = _probe(np.asarray(qv, dtype=np.float64), c_ids, c_mat, c_norm, n_probe)
-        qs.append(
-            (r.qid, _adc_luts(qv, cbs, m_sub, d0, ksub), [c_ids[j] for j in cells], None)
-        )
-    return (
-        _adc_ranked(encoded, qs)
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
+        probed = cterms = None
+        if cells is not None:
+            c_ids, c_mat, c_norm = cells
+            q = np.asarray(qv, dtype=np.float64)
+            dots = _fold_dots(q[None, :], c_mat)[0]
+            sims = dots / (np.sqrt(np.cumsum(q * q)[-1]) * c_norm)
+            near = sorted(range(len(c_ids)), key=lambda j: (-sims[j], c_ids[j]))[:n_probe]
+            probed = [c_ids[j] for j in near]
+            if residual:
+                cterms = [dots[j] for j in near]
+        qs.append((r.qid, _adc_luts(qv, cbs, d0), probed, cterms))
+    return _adc_ranked(encoded, qs, k)
+
+
+def _exact_rerank(corpus, queries, cand, k, id_col, vec_col):
+    """Re-rank the nominated (query_id, neighbor_id) pairs ``cand`` by
+    exact cosine and keep the :func:`_top_k`. ``cand`` (|queries|·c
+    rows) is broadcast onto a corpus scan column-pruned to (id,
+    vector), so only the nominees' true vectors are fetched — a
+    broadcast hash semi-join, no corpus shuffle — and the rank window
+    runs over |queries|·c rows. The cosine is the exact left fold the
+    brute-force oracle replays."""
+    cvec = ensure_parallelism(
+        _id_vec(corpus, id_col, vec_col, "neighbor_id", "cv"), VEC_BYTES_PER_SLICE
     )
+    qvec = _id_vec(queries, id_col, vec_col, "query_id", "qv")
+    cos = cosine_udf()
+    scored = (
+        cvec.join(F.broadcast(cand), "neighbor_id")
+        .join(F.broadcast(qvec), "query_id")
+        .select("query_id", "neighbor_id", F.round(cos(F.col("qv"), F.col("cv")), 6).alias("score"))
+    )
+    return _top_k(scored, k)
 
 
-def _pq_distortion(sample: DataFrame, cbs, m_sub: int, d0: int) -> float:
+def _pq_distortion(sample: DataFrame, cbs, d0: int) -> float:
     """Mean squared PQ reconstruction error of ``sample`` (id, v) under
     frozen per-subspace codebooks — the bounded drift statistic the
     persisted-index append gate compares against. One Arrow pass over
     the ≤ train_cap stride slice, two scalars per partition to the
-    driver; the same exact left-fold distance arithmetic the encode
-    pass argmins over."""
+    driver; the same :func:`_sq_dists` the encode pass argmins over."""
     C = [np.asarray(cb, dtype=np.float64) for cb in cbs]
-    schema = T.StructType(
-        [T.StructField("e", T.DoubleType()), T.StructField("c", T.LongType())]
-    )
 
     def dist(batches):
         for pdf in batches:
@@ -1210,17 +1169,12 @@ def _pq_distortion(sample: DataFrame, cbs, m_sub: int, d0: int) -> float:
                 continue
             V = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
             tot = 0.0
-            for s in range(m_sub):
-                P = V[:, s * d0 : (s + 1) * d0]
-                d = np.zeros((len(P), len(C[s])))
-                for j in range(d0):
-                    dcol = P[:, j, None] - C[s][None, :, j]
-                    d += dcol * dcol
-                tot += float(d.min(axis=1).sum())
+            for s, cb in enumerate(C):
+                tot += float(_sq_dists(V[:, s * d0 : (s + 1) * d0], cb).min(axis=1).sum())
             yield pd.DataFrame({"e": [tot], "c": [len(V)]})
 
     row = (
-        sample.mapInPandas(dist, schema)
+        sample.mapInPandas(dist, "e double, c long")
         .agg(F.sum("e").alias("e"), F.sum("c").alias("c"))
         .collect()[0]
     )
@@ -1228,26 +1182,15 @@ def _pq_distortion(sample: DataFrame, cbs, m_sub: int, d0: int) -> float:
 
 
 def _write_index_meta(spark, path: str, meta: dict) -> None:
-    """Persist the parameters-only meta as ONE parquet row via the
-    Spark writer (format/2) — every index artifact then lives behind
-    the same filesystem abstraction, so an object-store ``path`` that
-    can hold the codes can hold the meta too (r11 ADVICE: the
-    driver-side open() made build/query silently POSIX-only)."""
-    fields, vals = [], []
-    for k, v in meta.items():
-        if isinstance(v, bool):
-            t = "boolean"
-        elif isinstance(v, int) or v is None and k != "format":
-            t = "long"
-        elif isinstance(v, float):
-            t = "double"
-        else:
-            t = "string"
-        fields.append(f"{k} {t}")
-        vals.append(v)
-    _local_df(spark, [tuple(vals)], ", ".join(fields)).coalesce(
-        1
-    ).write.mode("overwrite").parquet(path.rstrip("/") + "/meta")
+    """Persist the parameters-only meta as ONE parquet row of
+    ``_META_DDL`` via the Spark writer (format/2) — every index
+    artifact then lives behind the same filesystem abstraction, so an
+    object-store ``path`` that can hold the codes can hold the meta
+    too."""
+    row = tuple(meta[c.split()[0]] for c in _META_DDL.split(", "))
+    _local_df(spark, [row], _META_DDL).coalesce(1).write.mode("overwrite").parquet(
+        path + "/meta"
+    )
 
 
 # Session-resident IVF-PQ handles: index path -> (meta listing, (meta,
@@ -1342,7 +1285,7 @@ def _ivfpq_index_read(spark, path: str):
         cbs = meta["cbs"]
     else:
         try:
-            mrow = spark.read.parquet(path.rstrip("/") + "/meta").collect()
+            mrow = spark.read.schema(_META_DDL).parquet(path + "/meta").collect()
         except Exception as e:
             raise ValueError(
                 f"not an ivfpq index (no meta relation or ivfpq_meta.json): {path}"
@@ -1410,62 +1353,45 @@ def ivfpq_index_build(
     the same parameters (the ann_index_roundtrip driver row pins this
     against the ivfpq oracle). Returns the meta dict with the
     in-memory c_ids/c_mat/cbs arrays attached for convenience."""
-    # refuse before the expensive coarse stage (the inline operators
-    # check dim first too — r11 review catch)
-    if dim % m_sub != 0:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    coarse = _resolve_coarse(coarse, centroid_stride, coarse_k)
-    d0 = dim // m_sub
-    base = corpus.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-    base = ensure_parallelism(base, VEC_BYTES_PER_SLICE)
-    n = _estimate_rows(base)
-    pq_stride = max(1, -(-n // train_cap))
-    c_ids, c_mat, coarse_k, centroid_stride = _coarse_centroids(
-        base, coarse, n, pq_stride,
-        centroid_stride, coarse_k, coarse_iters, max_centroids,
+    path = path.rstrip("/")
+    t = _ivfpq_train(
+        corpus, id_col, vec_col, dim, m_sub, ksub, iters, train_cap,
+        (coarse, centroid_stride, coarse_k, coarse_iters, max_centroids),
     )
-    c_norm = np.sqrt(np.cumsum(c_mat * c_mat, axis=1)[:, -1])
-    from .clustering import train_subspace_codebooks
-    tr = base.filter(F.col("id") % pq_stride == 0)
-    cbs = train_subspace_codebooks(tr, m_sub, d0, ksub, iters)
-    train_distortion = _pq_distortion(tr, cbs, m_sub, d0)
-    encoded = _ivfpq_encode_pass(base, c_ids, c_mat, c_norm, cbs, m_sub, d0)
-    encoded.write.mode("overwrite").parquet(path.rstrip("/") + "/codes")
+    train_distortion = _pq_distortion(t.tr, t.cbs, t.d0)
+    _encode_pass(t.base, t.cbs, t.d0, t.cells).write.mode("overwrite").parquet(path + "/codes")
     spark = corpus.sparkSession
+    c_ids, c_mat, _ = t.cells
     _local_df(
         spark,
         [(int(i), [float(x) for x in v]) for i, v in zip(c_ids, c_mat)],
         _CENTROIDS_DDL,
-    ).coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "/centroids")
+    ).coalesce(1).write.mode("overwrite").parquet(path + "/centroids")
     _local_df(
         spark,
-        [
-            (s, j, [float(x) for x in cbs[s][j]])
-            for s in range(m_sub)
-            for j in range(len(cbs[s]))
-        ],
+        [(s, j, [float(x) for x in c]) for s, cb in enumerate(t.cbs) for j, c in enumerate(cb)],
         _CODEBOOKS_DDL,
-    ).coalesce(1).write.mode("overwrite").parquet(path.rstrip("/") + "/codebooks")
+    ).coalesce(1).write.mode("overwrite").parquet(path + "/codebooks")
     meta = {
         "format": "nekton_spark.ivfpq/2",
         "m_sub": m_sub,
         "ksub": ksub,
-        "d0": d0,
+        "d0": t.d0,
         "dim": dim,
         "iters": iters,
         "train_cap": train_cap,
-        "coarse": coarse,
-        "coarse_k": coarse_k if coarse == "kmeans" else None,
-        "coarse_iters": coarse_iters if coarse == "kmeans" else None,
-        "centroid_stride": int(centroid_stride) if coarse == "sample" else None,
-        "n_rows": int(n),
+        "coarse": t.coarse,
+        "coarse_k": t.coarse_k,
+        "coarse_iters": coarse_iters if t.coarse == "kmeans" else None,
+        "centroid_stride": t.centroid_stride,
+        "n_rows": int(t.n),
         "train_distortion": float(train_distortion),
     }
     _write_index_meta(spark, path, meta)
     return meta | {
         "c_ids": [int(x) for x in c_ids],
         "c_mat": [[float(x) for x in row] for row in c_mat],
-        "cbs": cbs,
+        "cbs": t.cbs,
     }
 
 
@@ -1492,12 +1418,10 @@ def ivfpq_index_query(
     rebuilt or appended to by any process is re-read, never served
     stale. The codes relation is re-listed on every query, so appended
     rows are always scanned. The format/1 layout is read uncached."""
-    meta, c_ids, c_mat, c_norm, cbs = _ivfpq_index_load(spark, path)
+    meta, *cells, cbs = _ivfpq_index_load(spark, path)
     encoded = spark.read.schema(IVFPQ_CODES_SCHEMA).parquet(path.rstrip("/") + "/codes")
     return _ivfpq_adc_topk(
-        encoded, queries, c_ids, c_mat, c_norm, cbs,
-        meta["m_sub"], meta["d0"], meta["ksub"], n_probe, k,
-        id_col, vec_col,
+        encoded, queries, cbs, meta["d0"], k, id_col, vec_col, cells, n_probe
     )
 
 
@@ -1532,26 +1456,22 @@ def ivfpq_index_append(
     the caller guarantees disjoint ids, pass False to skip the scan.
     Format/2 indexes only (a /1 index predates the drift statistic —
     rebuild it). Returns the updated meta dict."""
+    path = path.rstrip("/")
     spark = corpus.sparkSession
-    meta, c_ids, c_mat, c_norm, cbs = _ivfpq_index_load(spark, path)
+    meta, *cells, cbs = _ivfpq_index_load(spark, path)
     if meta.get("format") != "nekton_spark.ivfpq/2":
         raise ValueError(
             "ivfpq_index_append requires a format/2 index (the r11 "
             "format/1 JSON layout records no train_distortion): rebuild "
             f"with ivfpq_index_build: {path}"
         )
-    m_sub, d0 = meta["m_sub"], meta["d0"]
-    base = corpus.select(
-        F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v")
-    )
-    base = ensure_parallelism(base, VEC_BYTES_PER_SLICE)
+    d0 = meta["d0"]
+    base = ensure_parallelism(_id_vec(corpus, id_col, vec_col), VEC_BYTES_PER_SLICE)
     n_new = _estimate_rows(base)
     if n_new == 0:
         return dict(meta)
     stride = max(1, -(-n_new // train_cap))
-    batch_distortion = _pq_distortion(
-        base.filter(F.col("id") % stride == 0), cbs, m_sub, d0
-    )
+    batch_distortion = _pq_distortion(base.filter(F.col("id") % stride == 0), cbs, d0)
     ref = float(meta["train_distortion"])
     if batch_distortion > drift_tol * max(ref, 1e-12):
         raise ValueError(
@@ -1560,7 +1480,7 @@ def ivfpq_index_append(
             f"({drift_tol}) x train_distortion {ref:.6g} — rebuild the "
             "index (or raise drift_tol deliberately)"
         )
-    codes_path = path.rstrip("/") + "/codes"
+    codes_path = path + "/codes"
     if verify_ids:
         existing = spark.read.schema(IVFPQ_CODES_SCHEMA).parquet(codes_path).select("id")
         dups = base.select("id").join(existing, "id", "left_semi").count()
@@ -1569,8 +1489,7 @@ def ivfpq_index_append(
                 f"append batch shares {dups} id(s) with the existing index "
                 "(duplicate ids corrupt queries); deduplicate or rebuild"
             )
-    encoded = _ivfpq_encode_pass(base, c_ids, c_mat, c_norm, cbs, m_sub, d0)
-    encoded.write.mode("append").parquet(codes_path)
+    _encode_pass(base, cbs, d0, cells).write.mode("append").parquet(codes_path)
     new_meta = dict(meta)
     new_meta["n_rows"] = int(meta["n_rows"]) + int(n_new)
     _write_index_meta(spark, path, new_meta)
@@ -1641,142 +1560,24 @@ def ivfpq_residual_topk(
     training/encode on residual slices → ADC + the per-cell coarse
     dot → exact-cosine re-rank) — exact hash-match, refuting the
     former "trades oracle replayability for recall" claim."""
-    if dim % m_sub != 0:
-        raise ValueError(f"dim {dim} not divisible by m_sub {m_sub}")
-    coarse = _resolve_coarse(coarse, centroid_stride, coarse_k)
-    d0 = dim // m_sub
-    from .clustering import train_subspace_codebooks
-
-    base = corpus.select(F.col(id_col).alias("id"), as_double(F.col(vec_col)).alias("v"))
-    base = ensure_parallelism(base, VEC_BYTES_PER_SLICE)
-    n = _estimate_rows(base)
-    pq_stride = max(1, -(-n // train_cap))
     # under kmeans the trained coarse cells give unimodal residuals AND
     # a far higher probed-set ceiling on clustered corpora — the
     # composition FAISS's IVFPQR actually ships
-    c_ids, c_mat, _kc, _cs = _coarse_centroids(
-        base, coarse, n, pq_stride,
-        centroid_stride, coarse_k, coarse_iters, max_centroids,
+    t = _ivfpq_train(
+        corpus, id_col, vec_col, dim, m_sub, ksub, iters, train_cap,
+        (coarse, centroid_stride, coarse_k, coarse_iters, max_centroids),
+        residual=True,
     )
-    c_norm = np.sqrt(np.cumsum(c_mat * c_mat, axis=1)[:, -1])
-
-    resid_schema = T.StructType(
-        [
-            T.StructField("id", T.LongType()),
-            T.StructField("rv", T.ArrayType(T.DoubleType())),
-        ]
+    encoded = _encode_pass(t.base, t.cbs, t.d0, t.cells, residual=True)
+    nominate = k if rerank_mult is None else max(k, rerank_mult * k)
+    ranked = _ivfpq_adc_topk(
+        encoded, queries, t.cbs, t.d0, nominate, id_col, vec_col, t.cells, n_probe,
+        residual=True,
     )
-
-    def _coarse_best(V: np.ndarray) -> np.ndarray:
-        # chunked exact-fold cosine argmax vs the closure centroid
-        # matrix — the parents' assignment kernel (ties → smallest cid
-        # via argmax-first over the cid-sorted matrix)
-        nv = np.sqrt(np.cumsum(V * V, axis=1)[:, -1])
-        best = np.empty(len(V), dtype=np.int64)
-        row_chunk = max(1, (32 << 20) // (8 * max(1, len(c_ids))))
-        for r0 in range(0, len(V), row_chunk):
-            r1 = min(r0 + row_chunk, len(V))
-            dots = _fold_dots(V[r0:r1], c_mat)
-            S = dots / (nv[r0:r1, None] * c_norm[None, :])
-            best[r0:r1] = S.argmax(axis=1)
-        return best
-
-    def residuals(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"id": [], "rv": []})
-                continue
-            V = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            R = V - c_mat[_coarse_best(V)]
-            yield pd.DataFrame({"id": pdf["id"].to_numpy(), "rv": list(R)})
-
-    # materialized once: the m_sub per-subspace k-means each run a seed
-    # job + (iters-1) recompute jobs over this bounded (≤ train_cap)
-    # relation — without the cut they would recompute the Arrow
-    # assignment 8× per job
-    trr = materialize(
-        base.filter(F.col("id") % pq_stride == 0).mapInPandas(
-            residuals, resid_schema
-        )
-    )
-    cbs = train_subspace_codebooks(
-        trr.select("id", F.col("rv").alias("v")), m_sub, d0, ksub, iters
-    )
-    C = [np.asarray(cb, dtype=np.float64) for cb in cbs]
-
-    def build(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                yield pd.DataFrame({"id": [], "cid": [], "codes": []})
-                continue
-            V = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            best = _coarse_best(V)
-            R = V - c_mat[best]
-            codes = np.empty((len(V), m_sub), dtype=np.int32)
-            for s in range(m_sub):
-                P = R[:, s * d0 : (s + 1) * d0]
-                d = np.zeros((len(P), len(C[s])))
-                for j in range(d0):  # exact left fold over dimensions
-                    dcol = P[:, j, None] - C[s][None, :, j]
-                    d += dcol * dcol
-                codes[:, s] = d.argmin(axis=1)  # first index on ties
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(),
-                    "cid": c_ids[best],
-                    "codes": list(codes),
-                }
-            )
-
-    encoded = base.mapInPandas(build, IVFPQ_CODES_SCHEMA)
-
-    qs = []
-    for r in _collect_queries(queries, id_col, vec_col):
-        qlist = list(r.qv)
-        cells = _probe(np.asarray(qlist, dtype=np.float64), c_ids, c_mat, c_norm, n_probe)
-        # coarse term <q, c_cid> per probed cell: the same 0.0-seeded
-        # left fold as the LUTs, replayed by the oracle's unrolled dot
-        cterms = []
-        for j in cells:
-            acc = 0.0
-            for t in range(dim):
-                acc += qlist[t] * float(c_mat[j][t])
-            cterms.append(acc)
-        qs.append(
-            (r.qid, _adc_luts(qlist, cbs, m_sub, d0, ksub), [c_ids[j] for j in cells], cterms)
-        )
-    ranked = _adc_ranked(encoded, qs)
-    if rerank_mult is None or not qs:
-        return ranked.filter(F.col("rank") <= k).select(
-            "query_id", "neighbor_id", "score", "rank"
-        )
-    c = max(k, rerank_mult * k)
-    cand = ranked.filter(F.col("rank") <= c).select("query_id", "neighbor_id")
-    cvec = ensure_parallelism(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-        ),
-        VEC_BYTES_PER_SLICE,
-    )
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    cos = cosine_udf()
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    rescored = (
-        cvec.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cos(F.col("qv"), F.col("cv")), 6).alias("score"),
-        )
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    if rerank_mult is None:
+        return ranked
+    cand = ranked.select("query_id", "neighbor_id")
+    return _exact_rerank(corpus, queries, cand, k, id_col, vec_col)
 
 
 def pq_topk_rerank(
@@ -1828,31 +1629,7 @@ def pq_topk_rerank(
         vec_col=vec_col,
         dim=dim,
     ).select("query_id", "neighbor_id")
-    cvec = ensure_parallelism(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-        ),
-        VEC_BYTES_PER_SLICE,
-    )
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv")
-    )
-    cos = cosine_udf()
-    scored = (
-        cvec.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cos(F.col("qv"), F.col("cv")), 6).alias("score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score", "rank")
-    )
+    return _exact_rerank(corpus, queries, cand, k, id_col, vec_col)
 
 
 def mmr_topk(
@@ -1902,10 +1679,7 @@ def mmr_topk(
         .transform(materialize)
     )
     cvec = ensure_parallelism(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("cv")
-        ),
-        VEC_BYTES_PER_SLICE,
+        _id_vec(corpus, id_col, vec_col, "neighbor_id", "cv"), VEC_BYTES_PER_SLICE
     )
     # same for the vector fetch: cwith appears on both sides of the
     # pairwise join — checkpoint keeps the corpus fetch join single-run

@@ -1244,6 +1244,81 @@ class TestSimilarity:
         assert sorted(map(tuple, warm)) == sorted(map(tuple, first))
         assert sorted(map(tuple, moved)) == sorted(map(tuple, first))
 
+    def test_ivfpq_index_query_after_append_jobs(self, spark, tmp_path):
+        """The first query after an append reloads the handle with 3
+        jobs on top of a warm query's 3: meta is read with its fixed
+        schema (no schema-inference job), then centroids and codebooks
+        are collected. Its rows equal a cold load's."""
+        from nekton_spark.functions import similarity as sim
+
+        rows, df = self._handle_corpus(spark, 79)
+        schema = "vec_id long, embedding array<double>"
+        p = str(tmp_path / "idx")
+        sim.ivfpq_index_build(df, p, coarse="sample", centroid_stride=10)
+        q = spark.createDataFrame(rows[:4], schema)
+        sim.ivfpq_index_query(spark, p, q, k=3).collect()
+        batch = spark.createDataFrame(
+            [(1000 + i, [x * 1.001 for x in v]) for i, v in rows[:5]], schema
+        )
+        sim.ivfpq_index_append(batch, p, drift_tol=1e9)
+        sc = spark.sparkContext
+        sc.setJobGroup("reload_ivfpq_query", "query after append")
+        try:
+            reloaded = sim.ivfpq_index_query(spark, p, q, k=3).collect()
+        finally:
+            sc.setJobGroup("", "")
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert len(sc.statusTracker().getJobIdsForGroup("reload_ivfpq_query")) == 6
+        sim._handles.clear()
+        cold = sim.ivfpq_index_query(spark, p, q, k=3).collect()
+        assert sorted(map(tuple, reloaded)) == sorted(map(tuple, cold))
+
+    def test_ann_kernel_tie_orders(self, spark):
+        """Crafted exact ties pin the shared kernels' tie rules: the
+        nearest coarse cell is the smallest cid among equal cosines,
+        each PQ code is the first of equally distant codes, and the PQ
+        distortion equals a naive per-row Python left fold."""
+        from nekton_spark.functions.similarity import (
+            _encode_pass,
+            _nearest_cell,
+            _pq_distortion,
+        )
+
+        # cids 10/20/30; rows 1 and 2 are parallel, so both score the
+        # same cosine bit for bit (power-of-two scaling is exact)
+        c_ids = np.array([10, 20, 30], dtype=np.int64)
+        c_mat = np.array([[0.0, 0.0, 0.0, 3.0], [1.0, 1.0, 2.0, 2.0], [2.0, 2.0, 4.0, 4.0]])
+        c_norm = np.sqrt(np.cumsum(c_mat * c_mat, axis=1)[:, -1])
+        V = np.array([[0.5, 0.5, 1.0, 1.0], [0.0, 0.0, 0.0, 1.0], [1.0, 1.0, 1.0, 1.0]])
+        assert _nearest_cell(V, c_mat, c_norm).tolist() == [1, 0, 1]
+        # subspace 0: codes 1 and 2 both at 0.5; subspace 1: codes 0
+        # and 2 both at 2.0
+        cbs = [[[5.0, 5.0], [1.0, 0.0], [0.0, 1.0]], [[0.0, 2.0], [5.0, 5.0], [2.0, 0.0]]]
+        base = spark.createDataFrame([(1, V[0].tolist())], "id long, v array<double>")
+        row = _encode_pass(base, cbs, 2, (c_ids, c_mat, c_norm)).collect()[0]
+        assert (row["cid"], list(row["codes"])) == (20, [1, 0])
+        row = _encode_pass(base, cbs, 2).collect()[0]
+        assert (row["cid"], list(row["codes"])) == (None, [1, 0])
+
+        rng = np.random.RandomState(7)
+        sample = [(i, rng.randn(4).tolist()) for i in range(6)]
+        got = _pq_distortion(
+            spark.createDataFrame(sample, "id long, v array<double>").coalesce(1), cbs, 2
+        )
+        tot = 0.0
+        for s, cb in enumerate(cbs):
+            part = 0.0
+            for _, v in sample:
+                best = math.inf
+                for c in cb:
+                    acc = 0.0
+                    for j in range(2):
+                        acc += (v[s * 2 + j] - c[j]) * (v[s * 2 + j] - c[j])
+                    best = min(best, acc)
+                part += best
+            tot += part
+        assert got == tot / len(sample)
+
     def test_ivfpq_index_second_query_no_codegen(self, spark, tmp_path):
         """The per-query values ride in one folded literal, so a second
         query op with different query ids (and vectors) compiles no new

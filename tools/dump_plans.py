@@ -3,8 +3,13 @@
 Usage: python tools/dump_plans.py <out_dir> <suffix> <query> [query ...]
        python tools/dump_plans.py <out_dir> <suffix> --all-headline
 
-Plan-only (no execution): used to record before/after physical plans
-for the optimization rounds. Suffix is "before" or "after".
+Builds each query's DataFrame and dumps its plan without collecting the
+result. Building is not free of execution: every ``materialize()`` pin and
+every driver-side collect the query takes while it is built (trained
+centroids, codebooks, collected query rows) runs first, so a dumped plan
+starts at the pinned checkpoint scans and does not show the stages
+before them. Used to record before/after physical plans; suffix is
+"before" or "after".
 """
 
 from __future__ import annotations
