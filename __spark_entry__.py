@@ -3662,15 +3662,8 @@ def classifier_score_check(spark, sf):
 # rows that run the same code under other parameters (ann_topk_lsh_mp,
 # ann_topk_ivf_kmeans, ann_topk_ivfpq_residual_k) are left to rotation.
 PRIORITY = [
-    "ann_topk_bruteforce",  # rank tail moved to the shared _top_k
-    "ann_topk_lsh",  # rank tail moved to the shared _top_k
-    "ann_topk_ivf",  # assignment via the shared _nearest_cell kernel; _top_k tail
-    "ann_topk_pq",  # _ivfpq_train prologue, _encode_pass with a null cid, _sq_dists codes
-    "ann_topk_pq_rerank",  # re-rank moved to the shared _exact_rerank
-    "ann_topk_ivfpq",  # train → _encode_pass → _ivfpq_adc_topk, the index build/query stages
-    "ann_topk_ivfpq_residual",  # residual training/encode via the shared helpers; cterms from the probe dots
-    "ann_index_roundtrip",  # shared build/encode stages; meta written and read with a fixed schema
-    "kmeans_tiered",  # _local_assign and the codebook/matrix assigners call similarity._sq_dists
+    "doc_repetition",  # dup_ngram_fraction is a codegen expression, not a pandas UDF
+    "corpus_quality_gate",  # its dup3_ok rule calls the same dup_ngram_fraction expression
 ]
 
 

@@ -392,22 +392,6 @@ def bpe_decode(
     return df.withColumn(out_col, _dec(F.col(ids_col)))
 
 
-def bpe_token_count_col(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    out_col: str = "n_bpe",
-    vocab: dict[str, int] | None = None,
-) -> DataFrame:
-    """``df`` plus a trained-BPE token count column — the adapter the
-    token-budget operators use when ``tokenizer="bpe"``."""
-    counts = bpe_encode(df, merges, text_col, id_col, vocab).select(
-        id_col, F.col("n_bpe").alias(out_col)
-    )
-    return df.join(counts, id_col)
-
-
 # Frozen standard merge table: train_bpe over the sf0.001 documents
 # corpus (n_merges=24), frozen as literals so serving-side queries and
 # their SQL oracles embed the IDENTICAL table (the lang_id_trained /

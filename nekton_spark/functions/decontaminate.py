@@ -135,28 +135,6 @@ def resolve_bloom_bits(eval_shingles: DataFrame, m_bits: int | None) -> int:
     return m_bits
 
 
-def bloom_bits(
-    eval_df: DataFrame,
-    n: int = 8,
-    m_bits: int | None = None,
-    k_hashes: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    tokenize: str = "word",
-) -> DataFrame:
-    """The SET-BIT RELATION of a Bloom filter over the eval set's
-    distinct n-gram shingles: one int row per set position (≤ m_bits
-    rows regardless of eval size). Deterministic (hash60 probes), so a
-    SQL oracle replays it bit for bit."""
-    ev = _doc_shingles(eval_df, id_col, text_col, n, "eval_id",
-                       tokenize=tokenize)
-    m_bits = resolve_bloom_bits(ev, m_bits)
-    return (
-        ev.select(F.explode(_bloom_positions(F.col("s"), m_bits, k_hashes)).alias("pos"))
-        .distinct()
-    )
-
-
 def bloom_contaminated_ids(
     train: DataFrame,
     eval_df: DataFrame,

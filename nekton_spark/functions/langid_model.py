@@ -521,11 +521,10 @@ def lang_id_trained(
 
     ``impl='arrow'`` (default): ONE mapInPandas pass — Python slicing
     + a per-executor int64 weight LUT rebuilt from the module
-    constants (no broadcast, no shuffle, map-only). The expression
-    twin below is the r8 dup_ngram_fraction lesson replayed: trigram
-    extraction via ``transform``/``concat`` is an interpreted
-    higher-order function (no codegen), measured 63 s for 50k sf1
-    docs vs ~2 s for this pass; the integer score arithmetic is
+    constants (no broadcast, no shuffle, map-only). In the expression
+    twin below, trigram extraction via ``transform``/``concat`` is an
+    interpreted higher-order function (no codegen), measured 63 s for
+    50k sf1 docs vs ~2 s for this pass; the integer score arithmetic is
     order-free, so both paths are bit-identical (tested equal, and
     the SQL oracle replays the same sums).
 

@@ -13,6 +13,7 @@ Operators:
 - :func:`lang_id` — n-gram/stopword-profile language guess.
 - :func:`fingerprint` — md5 content fingerprint of normalized text.
 - :func:`ngrams` — word n-gram array (shared with dedup).
+- :func:`dup_ngram_fraction` — intra-doc repeated n-gram share.
 """
 
 from __future__ import annotations
@@ -249,21 +250,6 @@ def punct_ratio(col: Column) -> Column:
     return F.when(n == 0, F.lit(0.0)).otherwise(punct.cast("double") / n)
 
 
-def upper_ratio(col: Column) -> Column:
-    c = F.coalesce(col, F.lit(""))
-    n = F.length(c)
-    upper = F.length(F.regexp_replace(c, r"[^\p{Lu}]", ""))
-    return F.when(n == 0, F.lit(0.0)).otherwise(upper.cast("double") / n)
-
-
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    toks = tokenize(F.lower(col))
-    stops = F.array(*[F.lit(w) for w in LANG_PROFILES[lang]])
-    hits = F.size(F.array_intersect(toks, stops))  # distinct-hit count
-    n = token_count(col)
-    return F.when(n == 0, F.lit(0.0)).otherwise(hits.cast("double") / n)
-
-
 def repetition_ratio(col: Column) -> Column:
     """1 - distinct_tokens/tokens: high = repetitive boilerplate."""
     toks = tokenize(F.lower(col))
@@ -358,46 +344,34 @@ def redact_pii(col: Column) -> Column:
 def dup_ngram_fraction(col: Column, n: int = 3) -> Column:
     """Fraction of word n-grams that are repeats within the document
     (1 - distinct/total) — the Gopher-style intra-doc repetition
-    signal ('duplicate 3-grams' family). 0 when fewer than n tokens.
+    signal ('duplicate n-grams' family). 0 when fewer than n tokens.
+    NULL text is the empty document.
 
-    Arrow-batched one-pass (r8): the expression form
-    (:func:`dup_ngram_fraction_expr`) references the interpreted
-    ngram-HOF three times (size, array_distinct, size) and Catalyst's
-    project-collapse re-inlines — re-executes — it per reference;
-    measured 7.1 s vs 0.6 s for this UDF over 5k sf0.1 docs (the
-    r1 md5-re-inline failure mode again). The UDF replicates the JVM
-    chain's semantics exactly: space-only strip (Spark/DuckDB trim),
-    ASCII ``\\s+`` split keeping leading/trailing empty tokens
-    (F.split limit -1 == re.split), NULL = empty document, and the
-    1 - distinct/total double division over identical integer
-    operands — bit-equal to the oracle (parity property-tested
-    against the expression form in tests/test_text_operators.py)."""
-    import re as _re
+    One codegen expression, linear in the token count, no lambda HOF:
+    with ``m = size(toks) - (n-1)`` grams, the n shifted views
+    ``slice(toks, k, m)`` for k = 1..n zip into m structs (gram i =
+    tokens i..i+n-1), each cast to one string, and the fraction is
+    ``1 - size(array_distinct(...)) / m``. Below n tokens the views
+    are clamped to length 1 and zip into one (null-padded) struct, so
+    the same formula reads 1 - 1/1 = 0. Having no CASE branch lets a
+    project's codegen split the text once per row (8 times with a
+    ``when(m <= 0, 0.0)`` guard, n = 3); a filter's codegen has no
+    common-subexpression step and splits it once per reference.
 
-    def one(t: str | None) -> float:
-        t = (t or "").strip(" ")
-        toks = _re.split(r"\s+", t, flags=_re.ASCII) if t else [""]
-        m = len(toks) - n + 1
-        if m <= 0:
-            return 0.0
-        distinct = len({tuple(toks[i : i + n]) for i in range(m)})
-        return 1.0 - distinct / m
-
-    @F.pandas_udf("double")
-    def _dup(texts: pd.Series) -> pd.Series:
-        return texts.map(one)
-
-    return _dup(col)
-
-
-def dup_ngram_fraction_expr(col: Column, n: int = 3) -> Column:
-    """Pure-JVM expression form of :func:`dup_ngram_fraction` — kept
-    as the tested-equal parity witness (and for expression-only
-    contexts); ~12× slower on wide scans due to HOF re-inlining."""
-    g = ngrams(col, n)
-    return F.when(F.size(g) <= 0, F.lit(0.0)).otherwise(
-        F.lit(1.0) - F.size(F.array_distinct(g)).cast("double") / F.size(g)
-    )
+    The string form is exact: ``\\s+`` tokens never contain a space
+    and the struct-to-string cast joins fields with ``", "``, so two
+    gram strings are equal exactly when their token tuples are — the
+    same distinct set as ``{tuple(toks[i:i+n])}``. It is also what
+    keeps the distinct step linear: ``array_distinct`` hashes strings,
+    but over structs it falls back to pairwise compares, O(m²) —
+    measured 35 s on 4 docs of 50k tokens (4 cores), against 0.3 s
+    warm for the strings."""
+    toks = tokenize(col)
+    m = F.greatest(F.size(toks) - (n - 1), F.lit(1))
+    grams = F.arrays_zip(
+        *[F.slice(toks, k, m) for k in range(1, n + 1)]
+    ).cast("array<string>")
+    return F.lit(1.0) - F.size(F.array_distinct(grams)) / m.cast("double")
 
 
 def common_passages(

@@ -11,6 +11,9 @@ restart from the checkpoint without duplicating epochs, carries dedup
 state across the restart, and agrees with its batch twin.
 """
 
+import os
+import time
+
 import pytest
 
 from nekton_spark.spec import Spec, run_spec, compile_spec
@@ -129,6 +132,12 @@ def curation_src(tmp_path_factory):
             (6, BASE + 121, "call +41446681800 about the irrigation contract renewal and the revised delivery timetable this week"),
         ],
     )
+    # the file source reads oldest mtime first and breaks same-
+    # millisecond ties in listing order: space the files 1 s apart,
+    # in the past, so f0 → f1 → f2 (and a later f3) arrive in order
+    t0 = time.time() - 60
+    for i in range(3):
+        os.utime(d / f"f{i}.parquet", (t0 + i, t0 + i))
     return d
 
 

@@ -504,6 +504,9 @@ PLAN_BUDGET = {
     "webdataset_extract": (2, 0),  # shard synth + in-shard sample grouping
     "exif_scrub": (4, 0),  # synth + extract + scrub + decode, still 0-shuffle
     "robots_eval": (1, 0),  # two agent verdicts fuse into one Arrow node
+    # dup_ngram_fraction is one codegen expression: no Python worker
+    "doc_repetition": (0, 0),
+    "corpus_quality_gate": (0, 0),  # one global agg (no hash exchange)
 }
 
 
@@ -531,6 +534,9 @@ PLAN_SIZE_BUDGET = {
     "embedding_pca": 13_000,
     "ann_topk_lsh_mp": 12_000,
     "ann_topk_lsh": 11_000,
+    # five rule expressions, each written out in the partial agg
+    # (10.4k at calibration)
+    "corpus_quality_gate": 15_000,
 }
 
 
@@ -545,6 +551,32 @@ PLAN_SIZE_BUDGET = {
 PLAN_REQUIRED_LINES = {
     "domain_quota_sample": [("WindowGroupLimit", "Partial")],
 }
+
+
+class TestCurationChainPlan:
+    def test_batch_twin_runs_no_python(self, spark, tmp_path):
+        """The ``specs/curation-stream.yml`` chain compiled over a
+        batch file source: no Python-eval node anywhere in the plan,
+        so each micro-batch of the stream stays inside the JVM."""
+        import datetime
+        import pathlib
+
+        from nekton_spark.spec import Spec, compile_spec
+
+        spec = Spec.from_file(
+            str(pathlib.Path(__file__).parents[1] / "specs" / "curation-stream.yml")
+        )
+        src = str(tmp_path / "src")
+        spark.createDataFrame(
+            [(0, datetime.datetime(2024, 1, 1), "a b c a b c")],
+            spec.input["schema"],
+        ).write.parquet(src)
+        spec.input.update(path=src, stream=False)
+        spec.input.pop("maxFilesPerTrigger")
+        spec.output = {"type": "memory"}
+        df, _ = compile_spec(spark, spec)
+        p = plans.simple_plan(df)
+        assert [k for k in PY_NODE_MARKERS if k in p] == []
 
 
 class TestPlanBudgets:

@@ -215,36 +215,90 @@ class TestBatchMetadata:
         assert batch_metadata(out).first().batch_meta == {"job": "j1"}
 
 
+def _dup_ngram_fraction_py(t, n):
+    """Pure-Python reference for ``dup_ngram_fraction``: space-only
+    strip (Spark/DuckDB trim), ASCII ``\\s+`` split keeping leading/
+    trailing empty tokens (F.split limit -1 == re.split), NULL = empty
+    document, distinct n-grams as token tuples."""
+    import re
+
+    t = (t or "").strip(" ")
+    toks = re.split(r"\s+", t, flags=re.ASCII) if t else [""]
+    m = len(toks) - n + 1
+    if m <= 0:
+        return 0.0
+    distinct = len({tuple(toks[i : i + n]) for i in range(m)})
+    return 1.0 - distinct / m
+
+
 class TestDupNgramFractionParity:
-    def test_arrow_path_bit_equal_to_expression_witness(self, spark):
-        """The r8 Arrow one-pass dup_ngram_fraction must be bit-equal
-        to the pure-JVM expression form on every whitespace/NULL edge
-        the tokenizer contract defines (space-only trim, ASCII \\s+
-        split keeping leading/trailing empties, NULL = empty doc)."""
+    EDGE_TEXTS = [
+        None, "", "   ", "\n", "a", "a b", "a b c", "a b c a b c",
+        "a a a a a a", "\nx y z x y z", "x y z  \n", "x\ty z x y z",
+        "a b c d e f g h", "one two three one two three one two three",
+        " nbsp stays one token maybe", "a  b   c a  b",
+    ]
+
+    @staticmethod
+    def _check(spark, texts, ns):
         from pyspark.sql import functions as F
 
-        from nekton_spark.functions.text_analysis import (
-            dup_ngram_fraction,
-            dup_ngram_fraction_expr,
-        )
+        from nekton_spark.functions.text_analysis import dup_ngram_fraction
 
-        texts = [
-            None, "", "   ", "\n", "a", "a b", "a b c", "a b c a b c",
-            "a a a a a a", "\nx y z x y z", "x y z  \n", "x\ty z x y z",
-            "a b c d e f g h", "one two three one two three one two three",
-            " nbsp stays one token maybe", "a  b   c a  b",
-        ]
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "id long, text string"
         )
-        for n in (2, 3, 5):
+        for n in ns:
             rows = df.select(
-                "id",
-                dup_ngram_fraction(F.col("text"), n).alias("arrow"),
-                dup_ngram_fraction_expr(F.col("text"), n).alias("expr"),
+                "id", dup_ngram_fraction(F.col("text"), n).alias("got")
             ).collect()
+            assert len(rows) == len(texts)
             for r in rows:
-                assert r.arrow == r.expr, (n, texts[r.id], r.arrow, r.expr)
+                want = _dup_ngram_fraction_py(texts[r.id], n)
+                assert r.got == want, (n, texts[r.id], r.got, want)
+
+    def test_expression_equals_python_reference(self, spark):
+        """The JVM expression is bit-equal to the tuple-set reference
+        on every whitespace/NULL edge the tokenizer contract defines."""
+        self._check(spark, self.EDGE_TEXTS, (1, 2, 3, 5))
+
+    def test_random_small_vocabulary(self, spark):
+        """Seeded docs over a tiny vocabulary, so grams repeat often.
+        Tokens carry the characters the gram-string encoding uses
+        (commas, braces) and the separators vary, so a lossy encoding
+        or a tokenizer drift shows up as an unequal fraction."""
+        import random
+
+        rng = random.Random(1212)
+        vocab = ["a", "b", "ab", ",", "a,", "{a", "b}", "{,}", "null"]
+        seps = [" ", "  ", "\t", "\n", " \n "]
+        texts = []
+        for _ in range(300):
+            k = rng.randint(0, 40)
+            body = "".join(
+                rng.choice(vocab) + rng.choice(seps) for _ in range(k)
+            )
+            texts.append(rng.choice(["", " ", "\n"]) + body)
+        self._check(spark, texts, (1, 2, 3, 5))
+
+    def test_long_documents_run_in_linear_time(self, spark):
+        """Docs of 50k tokens with planted repeated runs. The distinct
+        step hashes gram strings (~1 s on 4 cores); distinct over the
+        zipped structs compares pairwise, O(m²), and takes ~35 s."""
+        import random
+        import time
+
+        rng = random.Random(7)
+        texts = []
+        for _ in range(4):
+            toks = [f"w{rng.randrange(20_000)}" for _ in range(45_000)]
+            for _ in range(50):  # planted repeats of 100-token runs
+                i = rng.randrange(len(toks) - 100)
+                toks.extend(toks[i : i + 100])
+            texts.append(" ".join(toks))
+        t0 = time.perf_counter()
+        self._check(spark, texts, (3,))
+        assert time.perf_counter() - t0 < 20
 
     def test_ngram_count_equals_size_of_ngrams(self, spark):
         """r15 opt parity witness: ngram_count (token arithmetic) must
@@ -254,12 +308,7 @@ class TestDupNgramFractionParity:
 
         from nekton_spark.functions.text_analysis import ngram_count, ngrams
 
-        texts = [
-            None, "", "   ", "\n", "a", "a b", "a b c", "a b c a b c",
-            "a a a a a a", "\nx y z x y z", "x y z  \n", "x\ty z x y z",
-            "a b c d e f g h", "one two three one two three one two three",
-            " nbsp stays one token maybe", "a  b   c a  b",
-        ]
+        texts = self.EDGE_TEXTS
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "id long, text string"
         )
